@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Text
+import graft.plans.GraftExtensions
 
 /** BPE vocab-axis measurement (backing the r16 scale claims with numbers
   * rather than scaladoc):
@@ -51,7 +52,7 @@ object BpeLab {
     require(merges.size >= 500, s"expected a full 512 list, got ${merges.size}")
 
     def sumTokens(v: Int): Long = corpus.select(
-      sum(call_function(graft.plans.GraftExtensions.BpeCountName,
+      sum(GraftExtensions.call(spark, GraftExtensions.BpeCountName,
         col("t"), typedLit(merges.take(v)))).as("s"))
       .head().getLong(0)
     // scan floor: same corpus, same shape, no tokenizer

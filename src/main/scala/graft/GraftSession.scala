@@ -51,13 +51,12 @@ object GraftSession {
     * methodology sizes BOTH the master and the shuffle together (ADVICE
     * r13: a pinned-master lab that still derives shuffle partitions from
     * SPARK_GRAFT_CPUS drifts half its sizing with a leaked gate env);
-    * `extensions` is off only for mains that deliberately probe the
-    * no-extensions fallback path; `extra` carries lab-specific configs
-    * (applied last, so a lab invariant wins over any env knob). */
+    * `extra` carries lab-specific configs (applied last, so a lab
+    * invariant wins over any env knob). No engine config is needed:
+    * the kernels install themselves ([[graft.plans.GraftExtensions]]). */
   def build(defaultCpus: String = "32",
             logLevel: String = "ERROR",
             master: Option[String] = None,
-            extensions: Boolean = true,
             extra: Seq[(String, String)] = Nil,
             fixedCpus: Option[String] = None): SparkSession = {
     val env = sys.env
@@ -70,7 +69,6 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    if (extensions) b.config("spark.sql.extensions", "graft.plans.GraftExtensions")
     env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH")
       .foreach(cp => b.config("spark.executor.extraClassPath", cp))
     resolveExecutorMemory(env, m)

@@ -91,7 +91,7 @@ object ScaleUp {
     require(profile == "clique" || profile == "realistic",
       s"unknown profile '$profile' (clique|realistic)")
     // (µs TIMESTAMP output — not legacy INT96 — is part of the fold)
-    val spark = GraftSession.build(logLevel = "WARN", extensions = false)
+    val spark = GraftSession.build(logLevel = "WARN")
 
     def read(name: String): DataFrame =
       spark.read.schema(Schemas.byName(name)).parquet(s"$srcDir/$name.parquet")

@@ -59,7 +59,7 @@ object SkewLab {
     // × median AND skewedPartitionThresholdInBytes (default 256 MB —
     // far above what sf1 produces). Lower the knobs so the experiment
     // exercises the 100 TB code path at sandbox scale.
-    val spark = GraftSession.build(extensions = false, extra = Seq(
+    val spark = GraftSession.build(extra = Seq(
       // LAB INVARIANT (ADVICE r13): the whole experiment measures AQE's
       // skew split — a leaked SPARK_GRAFT_AQE=false would silently turn
       // the rung-1 arm inert; extra wins over the env knob

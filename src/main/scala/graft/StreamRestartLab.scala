@@ -72,8 +72,7 @@ object StreamRestartLab {
     // fixedCpus with the fixed master: this deliberately-sized child
     // session must not half-drift with a leaked SPARK_GRAFT_CPUS
     // (ADVICE r13) — master and shuffle width are one sizing decision
-    val spark = GraftSession.build(master = Some("local[8]"),
-      extensions = false, fixedCpus = Some("8"))
+    val spark = GraftSession.build(master = Some("local[8]"), fixedCpus = Some("8"))
     import spark.implicits._
     val schema = org.apache.spark.sql.Encoders.product[graft.streaming.Streams.Event].schema
     val stream = spark.readStream.schema(schema)
@@ -98,8 +97,7 @@ object StreamRestartLab {
     // µs precision on the staged chunks: sessionize's gap/order
     // arithmetic and the batch twin both work in exact epoch-µs
     // (TIMESTAMP_MICROS output is part of the fold)
-    val spark = GraftSession.build(master = Some("local[32]"),
-      extensions = false, fixedCpus = Some("32"))
+    val spark = GraftSession.build(master = Some("local[32]"), fixedCpus = Some("32"))
     import spark.implicits._
 
     val tmp = Files.createTempDirectory("graft_streamrestart").toString

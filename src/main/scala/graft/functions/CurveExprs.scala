@@ -258,16 +258,16 @@ object HilbertIndexN {
   * Semantics: requires `cuts` non-decreasing (percentile_approx output
   * always is — upper-bound binary search equals the linear count then,
   * duplicates included). Layout key columns are non-null by contract;
-  * NULL in either input yields NULL (the HOF fallback maps a NULL value
-  * to rank 0 — both land in the lowest tile, so layouts agree on real
-  * data; ZOrderSpec pins value equivalence on the data path).
+  * NULL in either input yields NULL (the HOF reference maps a NULL
+  * value to rank 0 — both land in the lowest tile, so layouts agree on
+  * real data; ZOrderSpec pins value equivalence on the data path).
   */
 case class BucketRank(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = right.dataType match {
     // containsNull must be FALSE: a null cut element would be read as
-    // garbage through ArrayData.getLong (and the HOF fallback counts a
+    // garbage through ArrayData.getLong (and the HOF reference counts a
     // null cut as 0 — silently different ranks). percentile_approx
     // output — the internal equi-depth path — is containsNull=false by
     // construction; any other SQL caller with a nullable-element array

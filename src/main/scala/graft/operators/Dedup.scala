@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftExtensions
 import graft.sources.Tables
 
 /** Document deduplication for training-data pipelines, over the driver's
@@ -809,51 +810,26 @@ object Dedup {
   lazy val hyperplanes: Seq[Seq[Long]] = hyperplaneMatrix(RpBits)
   lazy val hyperplanesWide: Seq[Seq[Long]] = hyperplaneMatrix(ScaledRpBits)
 
+  /** The registered sign-band function names: an unknown name fails
+    * here with the known list, so a typo'd or future variant cannot slip
+    * through (ADVICE r9) — a new one is added here and in
+    * [[graft.plans.GraftExtensions]], next to its matrix and band width. */
+  private val bandFunctions: Set[String] = Set(
+    GraftExtensions.SignBandsName, GraftExtensions.SignBandsWideName,
+    GraftExtensions.SignBandsXWideName)
+
   /** (vec_id, k, bv): LSH band values from the sign pattern. One narrow
-    * map-side projection — 60 integer dot products per row against a
-    * constant-folded matrix literal (codegen'd via `graft_dot_long` when
-    * the extension is registered), then bit-packing; no shuffle until the
-    * band self-join. Input is `Similarity.prepared` shape
-    * (vec_id, ie, nrm). */
-  /** Banding configuration per registered sign-band function name. The
-    * EXPLICIT map (not string-dispatch-with-fallback) makes an
-    * unrecognized name a loud error instead of silently banding with the
-    * narrow demo matrix — a typo'd or future third variant must be added
-    * here, next to its matrix and band width (ADVICE r9). */
-  private lazy val bandConfigs: Map[String, (Seq[Seq[Long]], Int)] = Map(
-    graft.plans.GraftExtensions.SignBandsName -> ((hyperplanes, RpBandBits)),
-    graft.plans.GraftExtensions.SignBandsWideName -> ((hyperplanesWide, ScaledBandBits)),
-    graft.plans.GraftExtensions.SignBandsXWideName -> ((hyperplanesWide, XWideBandBits)))
-
+    * map-side projection — the codegen'd [[graft.functions.SignBands]]
+    * kernel (the integer dot products against a constant matrix, then
+    * bit-packing; DedupSpec pins it against the higher-order-function
+    * reference); no shuffle until the band self-join. Input is
+    * `Similarity.prepared` shape (vec_id, ie, nrm). */
   def embedBands(s: SparkSession, vecs: DataFrame,
-                 fnName: String = graft.plans.GraftExtensions.SignBandsName): DataFrame = {
-    val (matrix, bandBits) = bandConfigs.getOrElse(fnName,
-      throw new IllegalArgumentException(
-        s"unknown sign-band function '$fnName'; known: ${bandConfigs.keys.mkString(", ")}"))
-    val banded =
-      if (s.catalog.functionExists(fnName))
-        vecs.withColumn("bands", call_function(fnName, col("ie")))
-      else hofBands(s, vecs, matrix, bandBits)
-    banded.select(col("vec_id"), posexplode(col("bands"))).toDF("vec_id", "k", "bv")
-  }
-
-  /** The composed (interpreted) form of [[graft.functions.SignBands]]:
-    * per-hyperplane dot → sign bit (projected ONCE — no CSE inside HOF
-    * lambdas), then MSB-first bit-pack per band. Fallback for sessions
-    * without GraftExtensions; DedupSpec pins its equality with the
-    * native expression. */
-  def hofBands(s: SparkSession, vecs: DataFrame,
-               matrix: Seq[Seq[Long]] = hyperplanes,
-               bandBits: Int = RpBandBits): DataFrame = {
-    val d = Similarity.dot(s) _
-    val nBands = matrix.length / bandBits
-    vecs
-      .withColumn("bits",
-        transform(typedLit(matrix), h => (d(col("ie"), h) >= 0).cast("long")))
-      .withColumn("bands",
-        transform(sequence(lit(0), lit(nBands - 1)),
-          k => aggregate(slice(col("bits"), k * lit(bandBits) + lit(1), lit(bandBits)),
-            lit(0L), (acc, x) => acc * 2 + x)))
+                 fnName: String = GraftExtensions.SignBandsName): DataFrame = {
+    require(bandFunctions.contains(fnName),
+      s"unknown sign-band function '$fnName'; known: ${bandFunctions.mkString(", ")}")
+    vecs.withColumn("bands", GraftExtensions.call(s, fnName, col("ie")))
+      .select(col("vec_id"), posexplode(col("bands"))).toDF("vec_id", "k", "bv")
   }
 
   /** Candidate pairs = vectors sharing >= 1 band value: a keyed equi-join
@@ -865,7 +841,7 @@ object Dedup {
     * signature): ~1.5e-5 random-pair collision per band while keeping
     * >0.999 recall at θ ≈ 18° — same plan, different constants. */
   def embedCandidates(s: SparkSession, vecs: DataFrame,
-                      fnName: String = graft.plans.GraftExtensions.SignBandsName): DataFrame = {
+                      fnName: String = GraftExtensions.SignBandsName): DataFrame = {
     val bands = embedBands(s, vecs, fnName)
     val a = bands.toDF("a_id", "k", "bv")
     val b = bands.toDF("b_id", "k", "bv")
@@ -878,7 +854,7 @@ object Dedup {
     * arithmetic is the integerized exact form shared with Similarity. */
   def embedNearDup(s: SparkSession, vecs: DataFrame,
                    threshold: Double = EmbedThreshold,
-                   fnName: String = graft.plans.GraftExtensions.SignBandsName): DataFrame = {
+                   fnName: String = GraftExtensions.SignBandsName): DataFrame = {
     val d = Similarity.dot(s) _
     val va = vecs.select(col("vec_id").as("a_id"), col("ie").as("ia"), col("nrm").as("na"))
     val vb = vecs.select(col("vec_id").as("b_id"), col("ie").as("ib"), col("nrm").as("nb"))
@@ -908,7 +884,7 @@ object Dedup {
     * candidate counts linear in that true population. */
   def qEmbedScaled(s: SparkSession, dir: String): DataFrame =
     embedNearDup(s, Similarity.prepared(s, dir), ScaledThreshold,
-      graft.plans.GraftExtensions.SignBandsWideName).orderBy("a_id", "b_id")
+      GraftExtensions.SignBandsWideName).orderBy("a_id", "b_id")
 
   /** Planted-replica spacing/offset for [[qEmbedPlanted]]: every 50th
     * vec_id is replicated verbatim at id + 10^9 (above every sf's max
@@ -938,7 +914,7 @@ object Dedup {
       .filter(pmod(col("vec_id"), lit(PlantEvery)) === 0)
       .withColumn("vec_id", col("vec_id") + lit(PlantOffset))
     embedNearDup(s, base.unionByName(planted), ScaledThreshold,
-      graft.plans.GraftExtensions.SignBandsWideName).orderBy("a_id", "b_id")
+      GraftExtensions.SignBandsWideName).orderBy("a_id", "b_id")
   }
 
   def qEmbedSql: String = embedSql(RpBits, RpBandBits, EmbedThreshold)

@@ -725,10 +725,14 @@ object Kpi {
     val topk = z
       .orderBy(coalesce(abs(col("z")), lit(0.0)).desc, col("emp_id").asc)
       .limit(limit)
+    // cents through DECIMAL(38,6), as the oracle does: a double median
+    // such as 246677.60499999998 is the half-cent .605 both engines
+    // must round up, which a double ROUND rounds down
+    def cents(c: String): Column = dbl(round(col(c).cast("decimal(38,6)"), 2))
     topk
       .filter(col("z").isNull || abs(col("z")) >= threshold)
-      .select(col("emp_id"), col("dept"), round(col("net"), 2).as("net"),
-        round(col("med"), 2).as("median_net"), round(col("mad"), 2).as("mad"), col("z"))
+      .select(col("emp_id"), col("dept"), cents("net").as("net"),
+        cents("med").as("median_net"), cents("mad").as("mad"), col("z"))
       .orderBy(coalesce(abs(col("z")), lit(0.0)).desc, col("emp_id").asc)
   }
 
@@ -737,6 +741,7 @@ object Kpi {
     // sqlLit escapes quotes — a dept value can be arbitrary user input
     // (ADVICE r01: unescaped splice broke/altered the oracle query).
     val deptPred = dept.fold("TRUE")(d => s"dept = ${Tables.sqlLit(d)}")
+    def cents(c: String): String = dblSql(s"ROUND(CAST($c AS DECIMAL(38,6)), 2)")
     s"""WITH data AS (
        |  SELECT o.o_custkey AS emp_id, n.n_name AS dept,
        |         ${dblSql("SUM(CAST(o.o_totalprice AS DECIMAL(18,4)))")} AS net
@@ -759,8 +764,8 @@ object Kpi {
        |      FROM dev JOIN mad USING (dept)),
        |topk AS (SELECT * FROM z
        |         ORDER BY COALESCE(ABS(z), 0) DESC, emp_id ASC LIMIT $limit)
-       |SELECT emp_id, dept, ROUND(net, 2) AS net, ROUND(med, 2) AS median_net,
-       |       ROUND(mad, 2) AS mad, z
+       |SELECT emp_id, dept, ${cents("net")} AS net, ${cents("med")} AS median_net,
+       |       ${cents("mad")} AS mad, z
        |FROM topk
        |WHERE z IS NULL OR ABS(z) >= $threshold
        |ORDER BY COALESCE(ABS(z), 0) DESC, emp_id ASC""".stripMargin

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.GraftExtensions
 import graft.sources.Tables
 
 /** Similarity search over the `embeddings` table (64-dim unit-norm float
@@ -22,8 +23,8 @@ import graft.sources.Tables
   * on a sample far below that bound.
   *
   * Scale design: brute force is one broadcast of the probe set against a
-  * linear scan (zip_with/aggregate are codegen'd array ops — no explode,
-  * no shuffle per pair), then a per-probe top-k window. The IVF variant
+  * linear scan (the codegen'd native dot kernel — no explode, no
+  * shuffle per pair), then a per-probe top-k window. The IVF variant
   * prunes the scan to nprobe clusters: the centroid table is |clusters|
   * rows (broadcast), and with the table written `partitionBy(label)` the
   * candidate read prunes at the directory level — at 100 TB the probe
@@ -42,19 +43,11 @@ object Similarity {
   def intVec(c: Column): Column =
     transform(c, x => round(x * lit(Scale.toDouble)).cast("long"))
 
-  /** Exact integer dot product — higher-order-function form. Correct but
-    * interpreted: Spark's HOFs are `CodegenFallback`, so this is the slow
-    * path, kept as the fallback for sessions without [[graft.plans.GraftExtensions]]. */
-  def dotL(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, _ * _), lit(0L), _ + _)
-
-  /** Exact integer dot product — native codegen'd expression when the
-    * session registered it (identical values either way; VectorExprsSpec
-    * pins the equivalence). The per-row kernel of every scan below. */
+  /** Exact integer dot product — the native codegen'd `graft_dot_long`
+    * (VectorExprsSpec pins it against the higher-order-function
+    * reference). The per-row kernel of every scan below. */
   def dot(s: SparkSession)(a: Column, b: Column): Column =
-    if (s.catalog.functionExists(graft.plans.GraftExtensions.DotLongName))
-      call_function(graft.plans.GraftExtensions.DotLongName, a, b)
-    else dotL(a, b)
+    GraftExtensions.call(s, GraftExtensions.DotLongName, a, b)
 
   /** The codebook collapsed to ONE broadcastable row:
     * `cb = array<struct<cluster, se, sn>>` (field order is the
@@ -64,30 +57,16 @@ object Similarity {
   def cbArr(codebook: DataFrame): DataFrame =
     codebook.agg(collect_list(struct(col("cluster"), col("se"), col("sn"))).as("cb"))
 
-  /** In-row argmax-cosine assignment — HOF fallback twin of the native
-    * kernel: identical arithmetic (exact int dot, one double divide) and
-    * identical (ccos desc, cluster asc) winner. Order-independent over
-    * `cb`, so the non-deterministic collect_list order is harmless. */
-  def argmaxCellL(cb: Column, ie: Column, nrm: Column): Column =
-    aggregate(cb,
-      struct(lit(Double.NegativeInfinity).as("c"), lit(Long.MaxValue).as("cl")),
-      (acc, e) => {
-        val ccos = dotL(ie, e("se")).cast("double") / (nrm * e("sn"))
-        when(ccos > acc("c") || (ccos === acc("c") && e("cluster") < acc("cl")),
-          struct(ccos.as("c"), e("cluster").as("cl"))).otherwise(acc)
-      })("cl")
-
-  /** In-row argmax cell id: native codegen'd kernel when registered,
-    * HOF twin otherwise (VectorExprsSpec pins kernel == fallback ==
-    * the r16 relational max_by form). Replaces the
+  /** In-row argmax cell id: the native `graft_argmax_cell` kernel —
+    * exact int dot, one double divide, (ccos desc, cluster asc) winner
+    * (VectorExprsSpec pins kernel == HOF reference == the r16
+    * relational max_by form). Replaces the
     * `crossJoin(broadcast(codebook)) → groupBy(vec_id) → max_by` shape,
     * which shuffled the whole corpus (ie payload included) per
     * assignment pass — guide §2.3: the answer is a per-row function of
     * a broadcast constant, so no corpus byte needs to move. */
   def argmaxCell(s: SparkSession)(cb: Column, ie: Column, nrm: Column): Column =
-    if (s.catalog.functionExists(graft.plans.GraftExtensions.ArgmaxCellName))
-      call_function(graft.plans.GraftExtensions.ArgmaxCellName, ie, nrm, cb)
-    else argmaxCellL(cb, ie, nrm)
+    GraftExtensions.call(s, GraftExtensions.ArgmaxCellName, ie, nrm, cb)
 
   /** embeddings + integer vector + exact norm. `balanced = false` for
     * probe-sized reads (a 3-row pushed-down scan gains nothing from a

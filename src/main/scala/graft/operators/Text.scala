@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.plans.GraftExtensions
 import graft.sources.Tables
 
 /** Text-analysis operators for training-data pipelines over `documents`:
@@ -1032,7 +1033,7 @@ object Text {
         // well-formed merges list (TextSpec pins the fixture and trained
         // lists word-by-word), vocab-independent cost — ~6x at sf10 even
         // at 24 merges (VERDICT r16 #4)
-        call_function(graft.plans.GraftExtensions.BpeCountName,
+        GraftExtensions.call(docs.sparkSession, GraftExtensions.BpeCountName,
           t, typedLit(merges)).as("n_tok_bpe"))
       .orderBy("doc_id")
   }
@@ -1062,7 +1063,7 @@ object Text {
     val bySrc = Window.partitionBy("source").orderBy("doc_id")
     Tables.balanced(Tables.documents(s, dir))
       .select(col("source"), col("doc_id"),
-        call_function(graft.plans.GraftExtensions.BpeCountName,
+        GraftExtensions.call(s, GraftExtensions.BpeCountName,
           norm(col("text")), typedLit(BpeMerges)).as("n_tok"))
       .withColumn("cum", sum("n_tok").over(bySrc))
       .withColumn("shard", expr(s"(cum - n_tok) div $PackBpeBudget"))
@@ -1575,7 +1576,7 @@ object Text {
     val merges = bpeMerges512Artifact(s, dir)
     bpeEntityCorpus(s, dir)
       .select(col("kind"), col("k"),
-        call_function(graft.plans.GraftExtensions.BpeCountName,
+        GraftExtensions.call(s, GraftExtensions.BpeCountName,
           col("t"), typedLit(merges)).as("n_tok_bpe"))
       .orderBy("kind", "k")
   }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
 
 /** The whole-operator custom-Catalyst path (SURVEY §7.2 option (c)): a
   * native point-in-time (as-of) join as a logical node + planner
-  * strategy + physical operator, registered through
-  * `SparkSessionExtensions` ([[GraftExtensions]]).
+  * strategy + physical operator; the builder installs the strategy into
+  * the caller's session ([[GraftExtensions.ensure]]).
   *
   * Semantics (identical to the composed [[graft.operators.TimeJoin
   * .asOfJoin]], and gated by the SAME DuckDB oracle): for each left row,
@@ -57,8 +57,8 @@ case class AsOfJoinNode(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsOfJoinNode]] to [[AsOfJoinExec]]; injected via
-  * `injectPlannerStrategy` in [[GraftExtensions]]. */
+/** Plans [[AsOfJoinNode]] to [[AsOfJoinExec]]; prepended to the
+  * session's `extraStrategies` by [[GraftExtensions.ensure]]. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinNode(l, r, lks, rks, lt, rt, rtie, inner) =>
@@ -263,6 +263,7 @@ object AsOfJoin {
       require(a.dataType == b.dataType,
         s"asOf key types must align: ${a.name}:${a.dataType} vs ${b.name}:${b.dataType}")
     }
+    GraftExtensions.ensure(left.sparkSession)
     Bridge.ofRows(left.sparkSession, AsOfJoinNode(lPlan, rPlan, lks, rks,
       requireTime(attr(lPlan, leftTime)), requireTime(attr(rPlan, rightTime)),
       attr(rPlan, rightTie), inner))

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Num.{dbl, dec}
+import graft.plans.GraftExtensions
 
 /** Multi-dimensional clustering (Z-order) — the data-skipping layout for
   * the predicate shape a single sort column cannot serve: a box over TWO
@@ -97,12 +98,12 @@ object ZOrder {
   }
 
   /** Curve dispatch shared by every quantizer (linear [[withZN]] and
-    * equi-depth [[withZEquiDepth]]): both carry the SAME guards, so an
-    * unregistered extension or a non-default order surfaces as the
-    * explanatory message on either path. Hilbert is 2-D via the planar
-    * rotate-fold kernel and N-D (up to 63/[[QuantBits]] dims) via the
-    * Skilling transpose form over an `array` of ranks (r16 — VERDICT
-    * r15 #7); Z covers N dimensions as before. */
+    * equi-depth [[withZEquiDepth]]): both carry the SAME guards, so a
+    * non-default order surfaces as the explanatory message on either
+    * path. Hilbert is 2-D via the planar rotate-fold kernel and N-D (up
+    * to 63/[[QuantBits]] dims) via the Skilling transpose form over an
+    * `array` of ranks (r16 — VERDICT r15 #7); Z covers N dimensions as
+    * before. */
   private def curveIndex(df: DataFrame, ranks: Seq[Column], bits: Int,
                          curve: String): Column = curve match {
     case "z" => interleaveBitsN(ranks, bits)
@@ -111,12 +112,9 @@ object ZOrder {
         s"hilbert index must fit a long: ${ranks.size} dims x $bits bits")
       require(bits == QuantBits,
         s"hilbert curve is registered at order $QuantBits, got bits=$bits")
-      val fn = if (ranks.size == 2) graft.plans.GraftExtensions.HilbertName
-               else graft.plans.GraftExtensions.HilbertNName
-      require(df.sparkSession.catalog.functionExists(fn),
-        "hilbert curve needs spark.sql.extensions=graft.plans.GraftExtensions")
-      if (ranks.size == 2) call_function(fn, ranks(0), ranks(1))
-      else call_function(fn, array(ranks: _*))
+      val s = df.sparkSession
+      if (ranks.size == 2) GraftExtensions.call(s, GraftExtensions.HilbertName, ranks: _*)
+      else GraftExtensions.call(s, GraftExtensions.HilbertNName, array(ranks: _*))
     case other => throw new IllegalArgumentException(
       s"unknown curve '$other' (z|hilbert)")
   }
@@ -127,8 +125,8 @@ object ZOrder {
     * (spans up to 2^53 — a µs month is ~2.6e12 — stay exact; the
     * quantizer needs no more). `curve` = "z" (default: pure-expression
     * bit interleave) or "hilbert" (the boundary-continuous native
-    * expression `graft_hilbert`; needs the Graft extension registered —
-    * see [[graft.functions.HilbertIndex]] for the trade). */
+    * expression `graft_hilbert` — see [[graft.functions.HilbertIndex]]
+    * for the trade). */
   def withZ(df: DataFrame, ca: String, cb: String, bits: Int = QuantBits,
             curve: String = "z"): DataFrame = withZN(df, Seq(ca, cb), bits, curve)
 
@@ -172,15 +170,13 @@ object ZOrder {
     * `percentile_approx` pass (same scan-speed pre-pass shape as
     * min/max); the per-row rank is the codegen'd
     * [[graft.functions.BucketRank]] binary search over the broadcast
-    * 2^cutBits-element cut array when the session registered
-    * GraftExtensions (the interpreted `aggregate` HOF remains the
-    * registration-free fallback — ZORDERLAB_r11 measured the HOF
-    * build at ~5-7× the linear quantizer's, the cost the native kernel
-    * removes). cutBits=8 (256 buckets/dim,
-    * 65k tiles) out-resolves any realistic file count. Cut placement is
-    * approximate ⇒ tile balance is approximate; correctness never
-    * depends on it (footer stats are exact regardless of how rows were
-    * binned). */
+    * 2^cutBits-element cut array (ZORDERLAB_r11 measured the interpreted
+    * `aggregate` HOF it replaced at ~5-7× the linear quantizer's build;
+    * ZOrderSpec keeps that HOF as the kernel's reference). cutBits=8
+    * (256 buckets/dim, 65k tiles) out-resolves any realistic file
+    * count. Cut placement is approximate ⇒ tile balance is approximate;
+    * correctness never depends on it (footer stats are exact regardless
+    * of how rows were binned). */
   def withZEquiDepth(df: DataFrame, ca: String, cb: String,
                      bits: Int = QuantBits, cutBits: Int = 8,
                      curve: String = "z"): DataFrame =
@@ -202,13 +198,8 @@ object ZOrder {
     val aggs = longs.zipWithIndex.map { case (l, i) =>
       percentile_approx(l, lit(probs), lit(10000)).as(s"__cuts$i") }
     val stats = df.agg(aggs.head, aggs.tail: _*)
-    val native = df.sparkSession.catalog
-      .functionExists(graft.plans.GraftExtensions.BucketRankName)
     def rank(v: Column, cuts: Column): Column = shiftleft(
-      if (native)
-        call_function(graft.plans.GraftExtensions.BucketRankName, v, cuts)
-      else
-        aggregate(cuts, lit(0L), (acc, c) => acc + when(v >= c, 1L).otherwise(0L)),
+      GraftExtensions.call(df.sparkSession, GraftExtensions.BucketRankName, v, cuts),
       bits - cutBits)
     val ranks = longs.zipWithIndex.map { case (l, i) =>
       rank(l, col(s"__cuts$i")) }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
+import graft.plans.GraftExtensions
 import org.apache.spark.sql.functions._
 
 /** Dedup semantics on planted fixtures: exact dups collapse, near-dups
@@ -141,7 +142,7 @@ class DedupSpec extends SparkSpec {
     val vecs = Seq((1L, base.toSeq), (2L, near.toSeq), (3L, far.toSeq))
       .toDF("vec_id", "embedding")
       .withColumn("ie", Similarity.intVec(col("embedding")))
-      .withColumn("nrm", sqrt(Similarity.dotL(col("ie"), col("ie")).cast("double")))
+      .withColumn("nrm", sqrt(KernelRefs.dotL(col("ie"), col("ie")).cast("double")))
     val cands = Dedup.embedCandidates(spark, vecs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands.contains((1L, 2L)), s"cos≈0.999 pair must share a band, got $cands")
@@ -160,7 +161,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("scaled embed dedup: exact-duplicate vectors always collide; base corpus is empty") {
-    val wide = graft.plans.GraftExtensions.SignBandsWideName
+    val wide = GraftExtensions.SignBandsWideName
     // identical vectors have identical signatures -> collide in EVERY band
     val rnd = new scala.util.Random(11)
     val base = Array.fill(64)(rnd.nextFloat() - 0.5f)
@@ -168,7 +169,7 @@ class DedupSpec extends SparkSpec {
     val vecs = Seq((1L, base.toSeq), (2L, base.toSeq), (3L, far.toSeq))
       .toDF("vec_id", "embedding")
       .withColumn("ie", Similarity.intVec(col("embedding")))
-      .withColumn("nrm", sqrt(Similarity.dotL(col("ie"), col("ie")).cast("double")))
+      .withColumn("nrm", sqrt(KernelRefs.dotL(col("ie"), col("ie")).cast("double")))
     val bands = Dedup.embedBands(spark, vecs, wide)
     val shared = bands.toDF("a", "k", "bv").join(bands.toDF("b", "k", "bv"), Seq("k", "bv"))
       .filter(col("a") === 1L && col("b") === 2L).count()
@@ -219,14 +220,14 @@ class DedupSpec extends SparkSpec {
     //  (b) a 32-bit band match is two adjacent 16-bit matches, so the
     //      xwide candidate set is a SUBSET of the wide one — re-cutting
     //      wider can only shed random collisions, never add them.
-    val xwide = graft.plans.GraftExtensions.SignBandsXWideName
+    val xwide = GraftExtensions.SignBandsXWideName
     val rnd = new scala.util.Random(13)
     val base = Array.fill(64)(rnd.nextFloat() - 0.5f)
     val vecs = Seq((1L, base.toSeq), (2L, base.toSeq),
         (3L, Array.fill(64)(rnd.nextFloat() - 0.5f).toSeq))
       .toDF("vec_id", "embedding")
       .withColumn("ie", Similarity.intVec(col("embedding")))
-      .withColumn("nrm", sqrt(Similarity.dotL(col("ie"), col("ie")).cast("double")))
+      .withColumn("nrm", sqrt(KernelRefs.dotL(col("ie"), col("ie")).cast("double")))
     val dups = Dedup.embedNearDup(spark, vecs, Dedup.ScaledThreshold, xwide)
       .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(dups == Set((1L, 2L)), s"exact pair must survive 32-bit bands, got $dups")
@@ -235,17 +236,17 @@ class DedupSpec extends SparkSpec {
       Dedup.embedCandidates(spark, corpus, fn)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val (wideC, xwideC) =
-      (cands(graft.plans.GraftExtensions.SignBandsWideName), cands(xwide))
+      (cands(GraftExtensions.SignBandsWideName), cands(xwide))
     assert(xwideC.subsetOf(wideC),
       s"xwide candidates must be a subset of wide (${xwideC.size} vs ${wideC.size})")
   }
 
   test("wide sign-bands: native == composed HOF form; values within 16-bit range") {
-    val wide = graft.plans.GraftExtensions.SignBandsWideName
+    val wide = GraftExtensions.SignBandsWideName
     val vecs = Similarity.prepared(spark, sf)
     val native = vecs.select(col("vec_id"),
-      call_function(wide, col("ie")).as("bands"))
-    val hof = Dedup.hofBands(spark, vecs, Dedup.hyperplanesWide, Dedup.ScaledBandBits)
+      GraftExtensions.call(spark, wide, col("ie")).as("bands"))
+    val hof = KernelRefs.hofBands(vecs, Dedup.hyperplanesWide, Dedup.ScaledBandBits)
       .select("vec_id", "bands")
     assert(native.except(hof).isEmpty && hof.except(native).isEmpty,
       "wide band values must be identical between the codegen'd and HOF paths")

@@ -21,7 +21,6 @@ object DriftProbe {
       .config("spark.sql.shuffle.partitions", 32)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_EXECUTOR_CLASSPATH")
       .foreach(cp => builder.config("spark.executor.extraClassPath", cp))

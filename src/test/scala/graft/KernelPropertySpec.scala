@@ -153,11 +153,10 @@ class KernelPropertySpec extends SparkSpec {
       val a = draw(vecGen, s.toLong)
       val b = draw(vecGen, (s + 50).toLong)
       val df = Seq((a, b)).toDF("a", "b")
+      val dot = Similarity.dot(spark) _
       val Array(ab, ba, aa, bb) = df.select(
-        call_function("graft_dot_long", col("a"), col("b")),
-        call_function("graft_dot_long", col("b"), col("a")),
-        call_function("graft_dot_long", col("a"), col("a")),
-        call_function("graft_dot_long", col("b"), col("b"))).collect()(0)
+        dot(col("a"), col("b")), dot(col("b"), col("a")),
+        dot(col("a"), col("a")), dot(col("b"), col("b"))).collect()(0)
         .toSeq.map(_.asInstanceOf[Long]).toArray
       assert(ab == ba, s"seed $s: symmetry")
       assert(aa >= 0 && bb >= 0, s"seed $s: self-dot nonneg")

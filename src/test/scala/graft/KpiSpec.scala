@@ -46,6 +46,15 @@ class KpiSpec extends SparkSpec {
     assert(out.map(_.getLong(0)).toSeq == Seq(4L))
   }
 
+  test("anomalies: a half-cent median rounds up like the oracle's decimal ROUND") {
+    // nets 246677.60 and 246677.61: the double median is
+    // 246677.60499999998, the half-cent .605 as a decimal
+    val out = Kpi.anomaliesFrom(
+      Seq((1L, "C", 246677.60), (2L, "C", 246677.61)).toDF("emp_id", "dept", "net"),
+      threshold = 0.0, limit = 10).collect()
+    assert(out.map(_.getAs[Double]("median_net")).toSet == Set(246677.61))
+  }
+
   test("delta antisymmetry: delta(m1,m2) = -delta(m2,m1)") {
     val ab = Kpi.deltaByDept(spark, sf, Kpi.M1, Kpi.M2).orderBy("dept").collect()
     val ba = Kpi.deltaByDept(spark, sf, Kpi.M2, Kpi.M1).orderBy("dept").collect()

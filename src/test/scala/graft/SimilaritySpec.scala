@@ -73,8 +73,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("integerized dot product is partitioning-independent (exact math)") {
     val v = Similarity.prepared(spark, sf)
-    val a = v.repartition(13).agg(sum(Similarity.dotL(col("ie"), col("ie")))).head.getLong(0)
-    val b = v.repartition(3).agg(sum(Similarity.dotL(col("ie"), col("ie")))).head.getLong(0)
+    val d = Similarity.dot(spark) _
+    val a = v.repartition(13).agg(sum(d(col("ie"), col("ie")))).head.getLong(0)
+    val b = v.repartition(3).agg(sum(d(col("ie"), col("ie")))).head.getLong(0)
     assert(a == b, "exact integer norms cannot depend on partitioning")
   }
 

@@ -1,7 +1,8 @@
 package graft
 
 import graft.operators.Text
-import org.apache.spark.sql.functions.{call_function, col, lit, typedLit}
+import graft.plans.GraftExtensions
+import org.apache.spark.sql.functions.{col, lit, typedLit}
 
 class TextSpec extends SparkSpec {
   private lazy val sp = spark
@@ -300,7 +301,7 @@ class TextSpec extends SparkSpec {
     val t = graft.functions.Hashes.normText(col("text"))
     graft.sources.Tables.documents(spark, sf)
       .select(
-        call_function(graft.plans.GraftExtensions.BpeCountName,
+        GraftExtensions.call(spark, GraftExtensions.BpeCountName,
           t, typedLit(Text.BpeMerges)).as("fast"),
         Text.bpeTokens(t).as("chain"))
       .collect()
@@ -366,7 +367,7 @@ class TextSpec extends SparkSpec {
     }
     val rows = Text.bpeEntityCorpus(spark, sf)
       .select(col("kind"), col("k"), col("t"),
-        call_function(graft.plans.GraftExtensions.BpeCountName,
+        GraftExtensions.call(spark, GraftExtensions.BpeCountName,
           col("t"), typedLit(merges)).as("fast"))
       .collect()
     assert(rows.length >= 300, s"corpus size ${rows.length}")
@@ -381,7 +382,7 @@ class TextSpec extends SparkSpec {
     val m24 = merges.take(24)
     Text.bpeEntityCorpus(spark, sf)
       .select(
-        call_function(graft.plans.GraftExtensions.BpeCountName,
+        GraftExtensions.call(spark, GraftExtensions.BpeCountName,
           col("t"), typedLit(m24)).as("fast"),
         Text.bpeTokens(col("t"), m24).as("chain"))
       .collect()
@@ -394,7 +395,7 @@ class TextSpec extends SparkSpec {
     val out = Seq("", "abc", "xyz", "abc abc zz", null)
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("i", "t")
-      .select(col("i"), call_function(graft.plans.GraftExtensions.BpeCountName,
+      .select(col("i"), GraftExtensions.call(spark, GraftExtensions.BpeCountName,
         col("t"), typedLit(merges)).as("n"))
       .orderBy("i").collect()
     assert(out(0).getLong(1) == 0L, "empty text -> 0 tokens")

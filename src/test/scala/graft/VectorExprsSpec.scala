@@ -3,14 +3,22 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import graft.operators.Similarity
+import graft.plans.GraftExtensions
 
 /** The native `graft_dot_long` expression: value-equivalence with the
-  * higher-order-function form it replaces, null semantics, and proof that
-  * it actually lands inside a WholeStageCodegen stage (the whole point —
-  * the HOF form is CodegenFallback). */
+  * higher-order-function form it replaces ([[KernelRefs]]), null
+  * semantics, and proof that it actually lands inside a WholeStageCodegen
+  * stage (the whole point — the HOF form is CodegenFallback). */
 class VectorExprsSpec extends SparkSpec {
   private lazy val sp = spark
   import sp.implicits._
+
+  // the kernels are called by name below: the SQL-user contract is to
+  // install them once, then call them
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    GraftExtensions.ensure(spark)
+  }
 
   private val rnd = new scala.util.Random(42)
   private def vec(n: Int): Seq[Long] = Seq.fill(n)(rnd.nextInt(20000001).toLong - 10000000L)
@@ -19,7 +27,7 @@ class VectorExprsSpec extends SparkSpec {
     val rows = Seq.fill(50)((vec(64), vec(64))).toDF("a", "b")
     val both = rows.select(
       call_function("graft_dot_long", col("a"), col("b")).as("native"),
-      Similarity.dotL(col("a"), col("b")).as("hof"))
+      KernelRefs.dotL(col("a"), col("b")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     // and against a driver-side ground truth
     val first = Seq((vec(64), vec(64))).toDF("a", "b")
@@ -71,7 +79,7 @@ class VectorExprsSpec extends SparkSpec {
     val vecs = Similarity.prepared(spark, sf)
     val native = vecs.select(col("vec_id"),
       call_function("graft_sign_bands", col("ie")).as("bands"))
-    val hof = graft.operators.Dedup.hofBands(spark, vecs).select("vec_id", "bands")
+    val hof = KernelRefs.hofBands(vecs).select("vec_id", "bands")
     assert(native.except(hof).isEmpty && hof.except(native).isEmpty,
       "band values must be identical between the codegen'd and HOF paths")
     // shape: RpBands values, each within [0, 2^RpBandBits)
@@ -88,18 +96,18 @@ class VectorExprsSpec extends SparkSpec {
     val native = vecs.crossJoin(broadcast(cb)).select(col("vec_id"),
       call_function("graft_argmax_cell", col("ie"), col("nrm"), col("cb")).as("cluster"))
     val hof = vecs.crossJoin(broadcast(cb)).select(col("vec_id"),
-      Similarity.argmaxCellL(col("cb"), col("ie"), col("nrm")).as("cluster"))
+      KernelRefs.argmaxCellL(col("cb"), col("ie"), col("nrm")).as("cluster"))
     // the shape this kernel replaced: explode ×|codebook|, shuffle,
     // max_by argmax — kept here as the equivalence oracle
     val relational = vecs.crossJoin(broadcast(seeds))
-      .withColumn("ccos", Similarity.dotL(col("ie"), col("se")).cast("double") /
+      .withColumn("ccos", KernelRefs.dotL(col("ie"), col("se")).cast("double") /
         (col("nrm") * col("sn")))
       .groupBy("vec_id")
       .agg(max_by(col("cluster"), struct(col("ccos"), -col("cluster"))).as("cluster"))
     assert(native.except(relational).isEmpty && relational.except(native).isEmpty,
       "kernel must pick the identical (ccos desc, cluster asc) winner")
     assert(native.except(hof).isEmpty && hof.except(native).isEmpty,
-      "HOF fallback must match the kernel")
+      "HOF reference must match the kernel")
   }
 
   test("argmax-cell kernel runs inside WholeStageCodegen and matches interpreted eval") {

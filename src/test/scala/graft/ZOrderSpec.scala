@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.GraftExtensions
 import graft.sources.{Tables, ZOrder}
 import org.apache.spark.sql.functions._
 
@@ -100,7 +101,8 @@ class ZOrderSpec extends SparkSpec {
     import graft.functions.HilbertIndexN
     val pts = Seq(Seq(0L, 0L, 0L), Seq(1L, 2L, 3L), Seq(65535L, 0L, 65535L),
       Seq(32767L, 32768L, 12345L), Seq(65535L, 65535L, 65535L))
-    val fn = graft.plans.GraftExtensions.HilbertNName
+    GraftExtensions.ensure(spark) // the SQL-user contract: install, then call by name
+    val fn = GraftExtensions.HilbertNName
     val got = pts.toDF("xs").selectExpr(s"$fn(xs) AS h")
       .collect().map(_.getLong(0))
     pts.zip(got).foreach { case (xs, h) =>
@@ -119,8 +121,9 @@ class ZOrderSpec extends SparkSpec {
     import graft.functions.HilbertIndex
     val pts = Seq((0L, 0L), (1L, 2L), (65535L, 0L), (0L, 65535L),
       (65535L, 65535L), (32767L, 32768L))
+    GraftExtensions.ensure(spark)
     val got = pts.toDF("a", "b")
-      .selectExpr("a", "b", s"${graft.plans.GraftExtensions.HilbertName}(a, b) AS h")
+      .selectExpr("a", "b", s"${GraftExtensions.HilbertName}(a, b) AS h")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     pts.foreach { case (a, b) =>
       assert(got((a, b)) == HilbertIndex.compute(a, b, 16),
@@ -158,20 +161,18 @@ class ZOrderSpec extends SparkSpec {
 
   test("bucket-rank native kernel == interpreted HOF on boundaries and duplicates") {
     // the codegen'd binary search (upper bound) must equal the linear
-    // count(v >= c) the fallback computes — including values below all
-    // cuts, above all cuts, and EQUAL to a duplicated cut (where a
+    // count(v >= c) the HOF reference computes — including values below
+    // all cuts, above all cuts, and EQUAL to a duplicated cut (where a
     // lower-bound search would differ)
     val sp = spark
     import sp.implicits._
-    import org.apache.spark.sql.functions.{aggregate => aggr}
+    GraftExtensions.ensure(spark)
     val cuts = Array(-5L, 0L, 0L, 3L, 7L, 7L, 7L, 100L)
     val values = Seq(-100L, -5L, -4L, 0L, 1L, 3L, 7L, 8L, 100L, 1000L) ++
       (0 until 500).map(i => (i.toLong * 104729L) % 250L - 50L)
     val df = values.toDF("v").withColumn("cuts", typedLit(cuts))
-    val native = call_function(
-      graft.plans.GraftExtensions.BucketRankName, col("v"), col("cuts"))
-    val hof = aggr(col("cuts"), lit(0L),
-      (acc, c) => acc + when(col("v") >= c, 1L).otherwise(0L))
+    val native = call_function(GraftExtensions.BucketRankName, col("v"), col("cuts"))
+    val hof = KernelRefs.bucketRankL(col("v"), col("cuts"))
     val bad = df.select(col("v"), native.as("n"), hof.as("h"))
       .filter(col("n") =!= col("h")).collect()
     assert(bad.isEmpty, s"native != HOF for: ${bad.mkString(", ")}")
