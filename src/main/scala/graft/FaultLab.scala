@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * fault-tolerance scaladoc (reliable `checkpoint()` when a checkpoint
   * dir is set ⇒ a lost executor re-reads from the shared store instead
   * of failing the job) from claim to measurement — the same move
-  * SpillLab made for ScalableMedian's spill branch in r9.
+  * SPILLLAB_r09.json made for ScalableMedian's spill branch (now
+  * pinned by ScalableMedianSpec).
   *
   * Method:
   *   1. baseline run — wall time + an ORDERLESS fingerprint

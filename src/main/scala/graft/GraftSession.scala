@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   *     (diagnosing a multi-process task abort needs one WARN-level run).
   *
   * Lab-specific configs go in `extra` and are applied LAST, so a lab
-  * invariant (e.g. ZOrderLab's AQE-off contract) wins over the env knob.
+  * invariant wins over the env knobs.
   * The resolvers are pure functions of an env map so HarnessSpec can pin
   * the derivation without starting a cluster.
   */

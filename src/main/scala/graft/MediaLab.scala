@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * Correctness tie-in: every arm's decoded output must carry the same
   * orderless fingerprint — partitioning may change cost, never an
-  * answer (the ZOrderLab contract applied to mapPartitions kernels).
+  * answer (the layout-gate contract applied to mapPartitions kernels).
   *
   * Run: SPARK_GRAFT_SF_DIR=testdata-sf10 SPARK_GRAFT_MEDIALAB_OUT=MEDIALAB_r13_sf10.json \
   *        sbt "runMain graft.MediaLab"

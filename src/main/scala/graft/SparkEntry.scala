@@ -89,7 +89,7 @@ object SparkEntry {
     // (might_contain machine-checked in PlanAuditSpec)
     "layout_bloom_smj" -> ((s, d) => sources.BloomJoin.qBloomStar(s, d)),
     // Composed layout: month partitions × z tiles within each month —
-    // directory pruning AND footer skipping in one scan (ZOrderLab's
+    // directory pruning AND footer skipping in one scan (ZORDERLAB_r13's
     // arm_partition_compose graduated to a gated query)
     "layout_partition_z" -> ((s, d) => sources.Partitioned.qPartitionZ(s, d)),
     // Training-data dedup family over `documents`

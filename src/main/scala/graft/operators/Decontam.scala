@@ -55,7 +55,7 @@ object Decontam {
     // exchange is gone; the one keyed shuffle left is the per-doc
     // rollup. Counts are unchanged: count over per-doc-distinct
     // shingles ≡ the old two-level (doc, sh) dedup + rollup. Measured
-    // sf10 interleaved (ProbeDecontam): 5.6–5.9 → 3.6–3.9 s (×0.64);
+    // sf10 interleaved (OPTIMIZATION_r17 §10): 5.6–5.9 → 3.6–3.9 s (×0.64);
     // all 475k report rows identical at both scales.
     val bench = docs.filter(isBench(col("doc_id")))
     val train = docs.filter(!isBench(col("doc_id")))

@@ -16,10 +16,11 @@ import graft.sources.Tables
   *  3. This salted join — when the small side is too big to broadcast AND
   *     the skew lives in an aggregation-like pattern AQE can't split.
   *
-  * MEASURED (graft.SkewLab, sf1 ×8 amplification, one key owning 50% of
-  * 48 M rows, local[32], SKEWLAB_r08.json): when AQE's split engages it
-  * wins outright — the join stage fans out past 32 tasks, the straggler
-  * disappears (max task ~1.6 s vs ~9.2 s unsplit) and wall drops ~3×;
+  * MEASURED (SKEWLAB_r08.json: sf1 ×8 amplification, one key owning 50%
+  * of 48 M rows, local[32]; SkewSpec pins the split engaging): when
+  * AQE's split engages it wins outright — the join stage fans out past
+  * 32 tasks, the straggler disappears (max task ~1.6 s vs ~9.2 s
+  * unsplit) and wall drops ~3×;
   * this salted join is then the WORST arm, because replicating the small
   * side ×salts costs ~5× total task-time and the value-hash salt
   * collides when hot-key rows carry few distinct values (here ~50
@@ -116,9 +117,9 @@ object Skew {
     * of sanely-sized chunks (hot/advisory ≈ 10-30 subpartitions, never
     * thousands). `adaptive.enabled` is pinned ON — this query GATES the
     * rung-1 lever, so the aqeoff sweep must not silently turn its
-    * subject off (the SkewLab/ZOrderLab lab-invariant rule, ADVICE
-    * r13); broadcast is pinned off or the dim-sized orders side would
-    * dodge the shuffle the skew lives in. */
+    * subject off (the lab-invariant rule of ADVICE r13); broadcast is
+    * pinned off or the dim-sized orders side would dodge the shuffle
+    * the skew lives in. */
   def skewAqeConfs(factRows: Long): Seq[(String, String)] = {
     // hot partition ≈ 90% of the fact at ~0.4-1.1 compressed B/row
     // (measured at sf0.001: 6000 rows → hot between 2 KB and 6 KB), so

@@ -1751,7 +1751,7 @@ object Text {
     // is a plain COUNT over the array_distinct'd explode — one keyed
     // exchange instead of countDistinct's two passes. Identical by
     // construction (count of per-doc-distinct occurrences ≡ distinct
-    // doc count); measured sf10 interleaved (ProbeBoiler): 4.6–5.1 →
+    // doc count); measured sf10 interleaved (OPTIMIZATION_r17 §9): 4.6–5.1 →
     // 3.9 s steady, boiler sets element-identical (34,324 chunks).
     val boiler = base.select(explode(array_distinct(chunkArrExpr)).as("chunk"))
       .groupBy("chunk").agg(count(lit(1)).as("docfreq"))

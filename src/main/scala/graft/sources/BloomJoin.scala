@@ -34,7 +34,7 @@ import graft.operators.Kpi
   *
   *   - both broadcast thresholds -1: locally the 2-month slice fits
   *     any threshold, so only -1 reproduces the at-scale SMJ regime
-  *     (same pinning RuntimeFilterLab documents);
+  *     (the pinning RTFILTERLAB_r11/r12 measured under);
   *   - `applicationSideScanSizeThreshold` 0: the production default
   *     (10 GB) is the DESIGNED engagement point — injection switches
   *     on exactly when shuffling the application side dominates; at
@@ -45,7 +45,7 @@ import graft.operators.Kpi
   *
   * Correctness contract: a runtime filter may change cost, never an
   * answer — the oracle runs the same star on the ORIGINAL tables with
-  * no knowledge of the bloom filter (ZOrderLab discipline).
+  * no knowledge of the bloom filter (the layout gates' discipline).
   */
 object BloomJoin {
   /** The two KPI months (same slice as kpi_pivot — the shape whose

@@ -96,9 +96,10 @@ object Partitioned {
   /** Z-tiles per month directory in the composed layout. 4 tiles split
     * each month's (custkey, totalprice) z-space at the top two curve
     * bits, enough for the declared box to skip whole tiles at the
-    * footer level while keeping the file count ~4×|months| (ZOrderLab's
-    * `arm_partition_compose` measured the tile-budget ladder; the
-    * declared query pins one rung as a gated layout). */
+    * footer level while keeping the file count ~4×|months|
+    * (`arm_partition_compose` in ZORDERLAB_r13_sf{1,10}.json measured
+    * the tile-budget ladder; the declared query pins one rung as a
+    * gated layout). */
   val TilesPerMonth = 4
 
   /** sf-stable price box: order totals are sums of a fixed line-item
@@ -110,7 +111,7 @@ object Partitioned {
   val PriceHi = 200000.0
 
   /** Month-partitioned AND z-clustered copy of orders: the composed
-    * layout ZOrderLab's `arm_partition_compose` measured (z strictly
+    * layout `arm_partition_compose` measured (ZORDERLAB_r13; z strictly
     * tightens the partition-pruned scan, partition pruning
     * undisturbed), graduated to a declared, gated layout. One range
     * shuffle on (month, z) at build time lays each month directory out

@@ -59,7 +59,7 @@ object ZOrder {
     * generalization Delta/Iceberg `OPTIMIZE ZORDER BY` expose: each
     * added dimension halves (per bit round) every dimension's
     * resolution share, so pruning per dimension softens as N grows —
-    * the standard trade, measured in ZOrderLab's 3-D arm. */
+    * the standard trade, measured in ZORDERLAB_r11's `arm_3d`. */
   def interleaveBitsN(cols: Seq[Column], bits: Int): Column = {
     val n = cols.size
     require(n >= 2, s"interleave needs >= 2 columns, got $n")
@@ -391,8 +391,8 @@ object ZOrder {
     * (the Skilling-transpose `graft_hilbert_n` expression, r16): same
     * 3-D box, same aggregate, same oracle on the ORIGINAL table — the
     * gate claim is "swapping the space-filling curve may change scan
-    * cost, never an answer". ZOrderLab's hilbert arm carries the
-    * measured scan-row ladder vs N-D Z on the same layouts. */
+    * cost, never an answer". ZORDERLAB_r16_sf1.json's `arm_hilbert3d`
+    * carries the measured scan-row ladder vs N-D Z on the same layouts. */
   def qHilbert3(s: SparkSession, dir: String): DataFrame = {
     val layout = Artifacts.cached(s, "hilbert3_events", s"$dir/events.parquet") {
       zOrderedN(Tables.events(s, dir), Seq("user_id", "event_type", "ts"),

@@ -55,6 +55,22 @@ class ClusterSpec extends SparkSpec {
     assert(labels.size == 40 && labels.values.toSet == Set(1L))
   }
 
+  test("star round law: a 1,000-vertex chain reaches its fixpoint in exactly 10 rounds") {
+    // propagation would need 999 rounds; the star loop is deterministic
+    // and CCLAB_r10/r11/r12 each measured 10 at n = 1000 (20 at 10^6),
+    // so a cap of 10 must return the fixpoint and a cap of 9 must refuse
+    val chain = spark.range(0, 999).select(col("id").as("a"), (col("id") + 1).as("b"))
+    val labels = Cluster.connectedComponentsStars(chain, maxRounds = 10)
+      .agg(count(lit(1)), sum(when(col("canonical_id") =!= 0L, 1L).otherwise(0L)))
+      .collect()(0)
+    assert(labels.getLong(0) == 1000 && labels.getLong(1) == 0,
+      s"every vertex must label 0: rows=${labels.getLong(0)} wrong=${labels.getLong(1)}")
+    val refused = intercept[IllegalArgumentException] {
+      Cluster.connectedComponentsStars(chain, maxRounds = 9)
+    }
+    assert(refused.getMessage.contains("did not reach a star fixpoint"))
+  }
+
   test("star variant alone matches propagation on a mixed multi-component graph") {
     val edges = Seq((1L, 9L), (9L, 4L), (6L, 2L), (2L, 9L), (11L, 12L),
       (20L, 21L), (21L, 22L), (23L, 22L), (5L, 4L))

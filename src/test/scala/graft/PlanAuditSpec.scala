@@ -88,7 +88,7 @@ class PlanAuditSpec extends SparkSpec {
     val df = SparkEntry.queries("layout_dpp_star")(spark, sf)
     df.collect()
     // SparkPlan.collect stops at AQE QueryStageExec leaves — descend
-    // explicitly (same trap RuntimeFilterLab documents)
+    // explicitly, or the scan under a finished stage is never seen
     def allNodes(p: SparkPlan): Seq[SparkPlan] = {
       val nested = p match {
         case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
@@ -309,14 +309,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("shuffle counts stay bounded for the hot queries (broadcasts excluded)") {
-    // regression tripwire: a rewrite that introduces an extra shuffle
-    // stage should fail loudly here. Broadcast exchanges are excluded —
-    // they are the plan we WANT for dims. Current counts: summary = 2
+    // regression tripwire: each count is pinned exactly, so a rewrite
+    // that adds a shuffle stage fails loudly, and one that removes a
+    // shuffle must lower its pin in the same change. Broadcast exchanges
+    // are excluded — they are the plan we WANT for dims. summary = 2
     // (two-phase countDistinct), by_dept = 3 (+ presentation sort),
     // delta = 2, sessions/window = 2 (keyed shuffle + range sort; the
     // session groupBy reuses the window's user_id partitioning).
-    val bounds = Map(
-      "kpi_summary" -> 2, "kpi_by_dept" -> 3, "kpi_delta_by_dept" -> 3,
+    val pins = Map(
+      "kpi_summary" -> 2, "kpi_by_dept" -> 3, "kpi_delta_by_dept" -> 2,
       "events_sessions" -> 2, "events_window" -> 2,
       // round-10: the z-ordered scan must reach the aggregate without
       // any shuffle beyond the two-phase countDistinct + presentation
@@ -476,17 +477,11 @@ class PlanAuditSpec extends SparkSpec {
       "text_bpe_train512" -> 1, "text_tokens_bpe512" -> 1,
       "dedup_clusters_stars" -> 5, "layout_hilbert" -> 3,
       "etl_publish_log" -> 8)
-    // the queries r17 re-planned are pinned EXACTLY: an exchange r17
-    // removed must not come back under a loose ceiling
-    val exact = Set("join_basket", "text_boilerplate", "pipeline_decontam",
-      "catalog_corr", "text_linedup", "text_bpe_train", "dedup_clusters_stars",
-      "join_salted")
-    bounds.foreach { case (name, maxEx) =>
+    pins.foreach { case (name, pin) =>
       val n = executed(name).collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
       }.length
-      if (exact(name)) assert(n == maxEx, s"$name has $n shuffle exchanges (pin $maxEx)")
-      else assert(n <= maxEx, s"$name has $n shuffle exchanges (bound $maxEx)")
+      assert(n == pin, s"$name has $n shuffle exchanges (pin $pin)")
     }
   }
 

@@ -46,4 +46,25 @@ class ScalableMedianSpec extends SparkSpec {
       .collect().map(_.toSeq).toSeq
     assert(a == b)
   }
+
+  test("scalable-median anomalies spill the window buffer and keep the answer") {
+    // the operator exists for groups that do not fit in memory; with the
+    // WindowExec row buffer capped at one row, every group of two or more
+    // rows spills (SPILLLAB_r09.json sized the same claim at sf10)
+    import org.apache.spark.sql.execution.window.WindowExec
+    def anomalies() = graft.operators.Kpi.anomalies(spark, sf, scalableMedian = true)
+    val comfortable = anomalies().collect().map(_.toSeq).toSeq
+    val confs = Seq(
+      "spark.sql.windowExec.buffer.in.memory.threshold" -> "1",
+      "spark.sql.windowExec.buffer.spill.threshold" -> "1")
+    graft.operators.Skew.withConfs(spark, confs) {
+      val df = anomalies()
+      val rows = df.collect().map(_.toSeq).toSeq
+      val spilled = graft.operators.Skew.finalPlanNodes(df).collect {
+        case w: WindowExec => w.metrics("spillSize").value
+      }
+      assert(spilled.sum > 0, s"no WindowExec spilled: $spilled")
+      assert(rows == comfortable)
+    }
+  }
 }
