@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE place a harness main builds its SparkSession (VERDICT r12 #4,
-  * carried from r11: Bench/Verify/VerifySubset and a dozen labs each
+  * carried from r11: Bench, Verify, its subset copy and a dozen labs each
   * re-derived the master/executor-memory/AQE/checkpoint incantation, and
   * the next new lab could silently skip a piece of it — exactly how the
   * r11 1 GB-executor trap shipped: `local-cluster[4,8,8192]` sizes the
@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * runs 8× under-provisioned executors while every artifact says "8 GB").
   *
   * The fold is the superset of every main's needs; the knobs are the
-  * driver-contract-neutral gate envs the Verify scaladoc documents:
+  * contract-neutral gate envs:
   *
   *   - SPARK_GRAFT_CPUS: core count for local[...] masters AND
   *     spark.sql.shuffle.partitions (per-main default preserved).

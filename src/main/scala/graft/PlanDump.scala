@@ -4,7 +4,8 @@ package graft
   * optimization-round evidence artifact (plans/r17/<query>_{before,after}.txt).
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [names...]
-  * With no names, dumps every declared query. Plans are captured WITHOUT
+  * With no names, dumps every declared query; an undeclared name fails
+  * before any plan is dumped. Plans are captured WITHOUT
   * executing the query (initial AQE plan — `isFinalPlan=false`), which is
   * the comparable, deterministic shape; queries whose construction itself
   * runs jobs (iterative operators) still run those, so a full dump takes
@@ -14,10 +15,9 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <suffix> [names...]")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val names = args.drop(3).toSet
+    val sel = SparkEntry.select(args.drop(3).toSeq)
     val spark = GraftSession.build(defaultCpus = "8")
     new java.io.File(outDir).mkdirs()
-    val sel = SparkEntry.queries.filter { case (n, _) => names.isEmpty || names(n) }
     sel.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)

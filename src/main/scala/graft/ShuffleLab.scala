@@ -57,6 +57,7 @@ object ShuffleLab {
     // from genuine superlinear shuffle growth — the kpi_by_dept case).
     val queries = sys.env.get("SPARK_GRAFT_SHUFFLELAB_QUERIES")
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Queries)
+    val builds = SparkEntry.select(queries)
     val bcastMb = sys.env.getOrElse("SPARK_GRAFT_BCAST_MB", "10")
     val spark = GraftSession.build(extra = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> s"${bcastMb}MB"))
@@ -96,12 +97,9 @@ object ShuffleLab {
       if (rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
     }
 
-    val unknown = queries.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"not declared queries: ${unknown.mkString(", ")}")
-
     // warmup at sf0.001: compile the plan shapes outside the measurement
     queries.foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir)
+      try builds(name)(spark, warmDir)
         .write.mode("overwrite").format("noop").save()
       catch { case _: Throwable => () }
     }
@@ -111,7 +109,7 @@ object ShuffleLab {
     queries.foreach { name =>
       resetCounters()
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
+      builds(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
       val wall = (System.nanoTime() - t0) / 1e9
       quiesce()

@@ -1,11 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each selected SparkEntry query's result →
+  * `<outDir>/<name>/` parquet, plus the FULL oracle_sql.json and
+  * waivers.json, for the DuckDB compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [name ...]
+  * With no names it dumps every declared query; with names, only those
+  * (an undeclared name fails before any query runs). The two JSON files
+  * always carry every query: tools/check.py reads them for whatever it is
+  * asked to gate, and a subset dump into a dir produced by a full run
+  * must not clobber the other queries' oracle entries. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val selected = SparkEntry.select(args.drop(2).toSeq)
     // Gate knobs (master / executor classpath+memory / AQE / checkpoint /
     // log level, all driver-contract-neutral — the driver's invocation
     // sets none of them) come from the shared session fold: GraftSession
@@ -36,14 +45,15 @@ object Verify {
             .cast(org.apache.spark.sql.types.TimestampNTZType))
         else d
       }
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try {
+    selected.foreach { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val status = try {
         val df = naiveTs(fn(spark, sfDir))
         (if (natural) df else df.repartition(1)).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+        "ok"
+      } catch { case e: Throwable => s"FAILED: ${e.getMessage}" }
+      println(f"VERIFY $name ${(System.nanoTime() - t0) / 1e9}%.2fs $status")
       // Release eager localCheckpoint blocks (iterative operators) so 46
       // sequential queries don't accumulate pinned storage — see Bench.
       spark.sharedState.cacheManager.clearCache()
@@ -62,9 +72,19 @@ object Verify {
       // irrelevant here; Bench keeps its measured conditional policy.
       ExecutorDrain.awaitClean(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
+    // Designed value waivers, dumped beside the oracle so every gate
+    // artifact self-describes "waived-by-design" vs "failing" (check.py
+    // folds these into each record as waived/waive_reason).
+    Files.writeString(Paths.get(s"$outDir/waivers.json"), json(SparkEntry.valueWaived))
+    spark.stop()
+  }
+
+  /** A string map as one JSON object. The escape covers backslash, quote
+    * and ALL control chars (<0x20) — a tab or CR in an oracle statement
+    * would otherwise make the gate's json.load fail and silently zero
+    * every query's correctness. */
+  def json(m: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -74,15 +94,6 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Designed value waivers, dumped beside the oracle so every gate
-    // artifact self-describes "waived-by-design" vs "failing" (check.py
-    // folds these into each record as waived/waive_reason).
-    val waivers = SparkEntry.valueWaived
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/waivers.json"), waivers)
-    spark.stop()
+    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
   }
 }

@@ -793,7 +793,6 @@ object Dedup {
     * any width, which is the population scale-dedup targets. Re-cutting
     * costs nothing at write: same signature, different slicing. */
   val XWideBandBits = 32
-  val XWideBands: Int = ScaledRpBits / XWideBandBits
 
   /** Deterministic ±1 hyperplanes for the sign projection, derived from
     * md5 parity so DuckDB reproduces the identical matrix
@@ -867,7 +866,8 @@ object Dedup {
 
   /** Demo-parameter embed near-dup (10×6-bit bands, 0.45 verify). NOT a
     * declared query since round 10: the 640-bucket band value space makes
-    * candidate mass quadratic in corpus size (measured, ProbeCand r9), so
+    * candidate mass quadratic in corpus size (measured in r9: SURVEY.md
+    * "dedup_embed_scaled (new query #107)"; probe source at ed10bcd), so
     * it cannot be offered as something a user could run at scale. Kept as
     * the DedupSpec/PlanAuditSpec fixture exercising the narrow native
     * kernel; [[qEmbedScaled]] is the declared production configuration. */
@@ -916,8 +916,6 @@ object Dedup {
     embedNearDup(s, base.unionByName(planted), ScaledThreshold,
       GraftExtensions.SignBandsWideName).orderBy("a_id", "b_id")
   }
-
-  def qEmbedSql: String = embedSql(RpBits, RpBandBits, EmbedThreshold)
 
   def qEmbedScaledSql: String = embedSql(ScaledRpBits, ScaledBandBits, ScaledThreshold)
 

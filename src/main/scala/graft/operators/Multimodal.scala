@@ -408,11 +408,12 @@ object Multimodal {
     * the GIF reader). `AudioSystem.getAudioInputStream` re-runs its
     * provider lookup through `JDK13Services.getProviders` — a GLOBALLY
     * SYNCHRONIZED method — on EVERY call: at 32 decode threads that
-    * monitor serialized the whole stage (ProbeCodecLock: 4,749/4,871
-    * blocked samples on it; MEDIALAB pre-fix: 91.7 s task run vs 5.3 s
-    * CPU at k=32 — 94% of task time spent blocked). ServiceLoader over
-    * the public `AudioFileReader` SPI finds the same platform readers
-    * (WAV/AIFF/AU) without the global lock. */
+    * monitor serialized the whole stage (a thread-state sampler, source
+    * at commit ed10bcd, counted 4,749/4,871 blocked samples on it; see
+    * SURVEY.md "The media_decode parallelism curve"; MEDIALAB pre-fix:
+    * 91.7 s task run vs 5.3 s CPU at k=32 — 94% of task time spent
+    * blocked). ServiceLoader over the public `AudioFileReader` SPI finds
+    * the same platform readers (WAV/AIFF/AU) without the global lock. */
   def audioFileReaders(): Seq[javax.sound.sampled.spi.AudioFileReader] = {
     val it = java.util.ServiceLoader
       .load(classOf[javax.sound.sampled.spi.AudioFileReader]).iterator()
@@ -428,7 +429,7 @@ object Multimodal {
     * globally-synchronized provider scan. Stateful on purpose: the
     * platform registers a MIDI-backed reader whose REJECTION path
     * itself consults `MidiSystem.getProviders` (the same global
-    * monitor — ProbeCodecLock caught it as the residual 4,127-sample
+    * monitor — the same sampling caught it as the residual 4,127-sample
     * block after the first fix), so a homogeneous payload stream must
     * not re-walk the provider list per row. The last-successful reader
     * is tried first; a mixed-format stream just falls back to the scan

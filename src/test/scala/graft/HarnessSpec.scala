@@ -1,6 +1,9 @@
 package graft
 
+import com.fasterxml.jackson.core.`type`.TypeReference
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Pins the harness-side session plumbing that has no oracle: the
   * local-cluster executor-memory derivation. The bracket memory in
@@ -9,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * unless the session sets it — found r11 when the "8 GB" bench
   * executors turned out to be `-Xmx1024M` and died on the four
   * heaviest queries. This spec keeps the parser honest so no future
-  * harness main re-introduces the silent 8× under-provisioning. */
+  * harness main re-introduces the silent 8× under-provisioning. It also
+  * pins the correctness dump's JSON and the declared-query list it is
+  * derived from — none of these cases needs a Spark session. */
 class HarnessSpec extends AnyFunSuite {
   test("local-cluster masters derive spark.executor.memory from the bracket") {
     assert(ExecutorDrain.executorMemoryFor("local-cluster[4,8,8192]")
@@ -53,5 +58,51 @@ class HarnessSpec extends AnyFunSuite {
     assert(GraftSession.resolveExecutorMemory(Map.empty, "local-cluster[4,8,8192]")
       .contains("8192m"))
     assert(GraftSession.resolveExecutorMemory(Map.empty, "local[32]").isEmpty)
+  }
+
+  // --- The dump the oracle gate reads: Verify.json writes
+  // oracle_sql.json and waivers.json, and SparkEntry.declared is the one
+  // list every contract map is derived from.
+
+  private def parse(json: String): Map[String, String] =
+    new ObjectMapper().readValue(json,
+      new TypeReference[java.util.Map[String, String]] {}).asScala.toMap
+
+  test("Verify.json round-trips quotes, backslashes and control chars") {
+    val m = Map(
+      "q\"k\\" -> "SELECT '\"a\"' AS \"x\\y\"",
+      "ctl" -> "line1\nline2\r\n\tindented\u0001end",
+      "plain" -> "")
+    assert(parse(Verify.json(m)) == m)
+    // the short escapes for tab, newline and CR; the rest by code point
+    assert(Verify.json(Map("k" -> "a\tb\nc\rd\u0001")) ==
+      "{\"k\": \"a\\tb\\nc\\rd\\u0001\"}")
+  }
+
+  test("the oracle dump carries exactly the declared queries, one oracle each") {
+    assert(SparkEntry.declared.map(_.name).distinct.size == SparkEntry.declared.size,
+      "a query name is declared twice")
+    val dumped = parse(Verify.json(SparkEntry.oracleSql))
+    assert(dumped.keySet == SparkEntry.queries.keySet)
+    assert(dumped == SparkEntry.oracleSql)
+    // the declared surface (ROADMAP north star): a query added or
+    // dropped must move this pin on purpose
+    assert(dumped.size == 130)
+  }
+
+  test("value waivers name declared queries only: the one designed HLL waiver") {
+    assert(SparkEntry.valueWaived.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.valueWaived.keySet == Set("kpi_headcount_approx"))
+    assert(parse(Verify.json(SparkEntry.valueWaived)) == SparkEntry.valueWaived)
+  }
+
+  test("select: no names is every query, a typo fails and lists the valid names") {
+    assert(SparkEntry.select(Nil).keySet == SparkEntry.queries.keySet)
+    assert(SparkEntry.select(Seq("kpi_summary", "etl_publish")).keySet ==
+      Set("kpi_summary", "etl_publish"))
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("kpi_summary", "kpi_sumary"), "BENCH names"))
+    assert(e.getMessage.contains("BENCH names not declared in SparkEntry.queries: kpi_sumary;"))
+    assert(e.getMessage.contains("valid: ") && e.getMessage.contains("kpi_summary"))
   }
 }

@@ -4,10 +4,12 @@ the sf tables and compare with the Spark parquet output written by
 graft.Verify. Usage:
   tools/check.py <sfDir> <verifyOutDir> [--json OUT.json] [query ...]
 
-A VerifySubset dump writes the FULL oracle map but only the named
-queries' parquet — when checking such a dir, pass those query names;
-a no-names invocation checks every oracle entry and will fail on the
-queries the subset run never dumped.
+`graft.Verify <sfDir> <outDir> name ...` dumps only the named queries'
+parquet but always writes the FULL oracle_sql.json and waivers.json —
+when checking such a dir, pass those query names; a no-names invocation
+checks every oracle entry and will fail on the queries the subset run
+never dumped. A requested name with no oracle entry is an error, so a
+typo cannot pass as an empty check.
 
 Handles both table layouts: the driver's flat `<table>.parquet` files and
 ScaleUp's `<table>.parquet/` directories of part files. ScaleUp writes
@@ -24,15 +26,6 @@ import duckdb
 import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-# Queries whose VALUES are waived by design: the oracle reproduces row
-# count and schema, but the payload is engine-specific (Spark's HLL++
-# estimate has no DuckDB twin). The engine-independent property (the
-# estimate's error bound) is fully hash-gated by kpi_headcount_audit.
-# The authoritative map is SparkEntry.valueWaived, dumped by Verify as
-# <outDir>/waivers.json with per-query reasons; this set is the
-# fallback for older dumps without one.
-VALUE_WAIVED = {"kpi_headcount_approx"}
 
 def table_source(sf_dir, t):
     p = f"{sf_dir}/{t}.parquet"
@@ -70,10 +63,14 @@ def main():
                         "user_id, event_type, value, props")
         con.execute(f"CREATE VIEW {t} AS SELECT {cols} FROM {src}")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    waiver_path = f"{out_dir}/waivers.json"
-    waivers = (json.load(open(waiver_path)) if os.path.exists(waiver_path)
-               else {n: "value waived (legacy dump: no waivers.json)"
-                     for n in VALUE_WAIVED})
+    # Queries whose VALUES are waived by design (SparkEntry.valueWaived,
+    # with per-query reasons): the oracle reproduces row count and schema,
+    # but the payload is engine-specific.
+    waivers = json.load(open(f"{out_dir}/waivers.json"))
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        print(f"no oracle entry for requested queries: {', '.join(unknown)}")
+        sys.exit(2)
     n_pass = n_fail = 0
     report = {}
     for name, sql in sorted(oracle.items()):

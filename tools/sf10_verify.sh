@@ -27,8 +27,8 @@ for chunk in "${CHUNKS[@]}"; do
   i=$((i+1))
   echo "=== chunk $i/${#CHUNKS[@]}: $chunk"
   SPARK_GRAFT_CPUS=32 SPARK_GRAFT_VERIFY_NATURAL=1 \
-    sbt -batch "Test/runMain graft.VerifySubset $SF $OUT $chunk" 2>&1 \
-    | grep -E "PROBE|error\]|Exception|No space" | grep -v "WARN" | tail -20
+    sbt -batch "runMain graft.Verify $SF $OUT $chunk" 2>&1 \
+    | grep -E "VERIFY|error\]|Exception|No space" | grep -v "WARN" | tail -20
   df -h / | tail -1
 done
 echo "=== all chunks done"
