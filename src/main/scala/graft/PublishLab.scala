@@ -4,9 +4,9 @@ import graft.sources.Publish
 
 /** Two-DRIVER publish race (VERDICT r16 #7): the commit-log protocol's
   * slot CAS is spec-tested single-process; this lab races two real
-  * driver JVMs publishing generations to ONE root under the log
-  * protocol (the FaultLab separate-process pattern) and asserts, from
-  * the parent, the three multi-writer contracts:
+  * driver JVMs publishing generations to ONE local root (the FaultLab
+  * separate-process pattern) and asserts, from the parent, the three
+  * multi-writer contracts:
   *
   *   - LAST-WINS: the resolved live generation is the one named by the
   *     highest commit slot, and that slot == total publishes (every
@@ -28,8 +28,7 @@ import graft.sources.Publish
   */
 object PublishLab {
   private def workerMain(root: String, writer: String, iters: Int): Unit = {
-    val spark = GraftSession.build(defaultCpus = "4", logLevel = "ERROR",
-      extra = Seq("spark.graft.publish.protocol" -> "log"))
+    val spark = GraftSession.build(defaultCpus = "4", logLevel = "ERROR")
     import spark.implicits._
     (1 to iters).foreach { i =>
       val gen = Publish.publishGeneration(spark, root, Seq(
@@ -73,8 +72,7 @@ object PublishLab {
     }
 
     // the parent's own session doubles as the concurrent READER
-    val spark = GraftSession.build(defaultCpus = "4", logLevel = "ERROR",
-      extra = Seq("spark.graft.publish.protocol" -> "log"))
+    val spark = GraftSession.build(defaultCpus = "4", logLevel = "ERROR")
 
     val (pa, la) = spawn("A")
     val (pb, lb) = spawn("B")

@@ -63,13 +63,10 @@ object SparkEntry {
     Query("etl_employee_upsert", (s, _) => Etl.qEmployeeUpsert(s), Etl.qEmployeeUpsertSql),
     Query("etl_fact_upsert", (s, _) => Etl.qFactUpsert(s), Etl.qFactUpsertSql),
     Query("etl_count", (s, _) => Etl.qCount(s), Etl.qCountSql),
-    // Manifest-pointer multi-table atomic commit over the same 3-table
-    // lifecycle (summary computed FROM the published generations)
+    // Multi-table atomic commit through the rename-free generation log
+    // over the same 3-table lifecycle (summary computed FROM the
+    // published generations)
     Query("etl_publish", (s, _) => Etl.qPublish(s), Etl.qPublishSql),
-    // The rename-free commit-log protocol (object-store posture): same
-    // lifecycle, so etl_publish's oracle — a commit protocol changes
-    // cost, not answers
-    Query("etl_publish_log", (s, _) => Etl.qPublishLog(s), Etl.qPublishSql),
     Query("etl_snapshot_diff", (s, _) => Etl.qSnapshotDiff(s), Etl.qSnapshotDiffSql),
     // SCD Type-2 versioned-dimension maintenance (close + reopen in one
     // full-outer pass)

@@ -156,14 +156,14 @@ object Etl {
   def qCount(s: SparkSession): DataFrame =
     qFactUpsert(s).agg(count(lit(1)).as("cnt"))
 
-  /** Declared query gating the manifest-pointer multi-table commit
+  /** Declared query gating the multi-table atomic commit
     * ([[graft.sources.Publish]]) on the REAL 3-table lifecycle: publish
-    * generation 1 (initial load), read it back through the pointer,
+    * generation 1 (initial load), read it back through the commit log,
     * build generation 2's upserts FROM THE PUBLISHED TABLES (dims/
     * employees/facts as a downstream consumer would read them — not
     * from in-flight frames), publish, read back again. The returned
     * summary rows are computed from the PUBLISHED parquet, so the gate
-    * covers staging, the atomic swap, and the all-of-one-generation
+    * covers staging, the atomic commit, and the all-of-one-generation
     * read view; per-table contents stay hash-gated by etl_dim_upsert /
     * etl_employee_upsert / etl_fact_upsert.
     *
@@ -173,44 +173,24 @@ object Etl {
     * result as [[qEmployeeUpsert]]'s merge-then-resolve because
     * insert-if-absent dims keep existing ids (the oracle mirrors this
     * resolve-then-merge shape verbatim). */
-  def qPublish(s: SparkSession): DataFrame = publishLifecycle(s, "etl")
-
-  /** The same 3-table publish lifecycle through the RENAME-FREE log
-    * protocol (r16, [[graft.sources.Publish]] `log`): the conf forces
-    * the protocol for the duration and a separate process-scoped root
-    * keeps the two gates' state apart. Gated under the SAME oracle as
-    * `etl_publish` — a commit protocol may change cost, never answers. */
-  def qPublishLog(s: SparkSession): DataFrame = {
-    // restore the PRIOR value, not unconditionally unset (ADVICE r16):
-    // a user-forced protocol must survive this query running
-    val prior = s.conf.getOption("spark.graft.publish.protocol")
-    s.conf.set("spark.graft.publish.protocol", "log")
-    try publishLifecycle(s, "etllog")
-    finally prior match {
-      case Some(v) => s.conf.set("spark.graft.publish.protocol", v)
-      case None    => s.conf.unset("spark.graft.publish.protocol")
-    }
-  }
-
-  private def publishLifecycle(s: SparkSession, prefix: String): DataFrame = {
+  def qPublish(s: SparkSession): DataFrame = {
     import graft.sources.{Artifacts, Publish}
     // PROCESS-SCOPED publish root (ADVICE r15): two concurrent driver
-    // processes sharing `.artifacts/publish/etl` race on CURRENT
+    // processes sharing `.artifacts/publish/etl` race on the commit log
     // last-wins and on the retention sweep — one run's readGeneration
     // can resolve the other's generation (wrong summary rows) or read
     // files the other's sweep just deleted. Same host+pid discipline as
     // the compacted band table; leftovers from provably-dead processes
-    // on THIS host are swept below (other hosts' liveness is unknowable
-    // here, so their roots are left alone).
+    // on THIS host are swept below, whatever their prefix (other hosts'
+    // liveness is unknowable here, so their roots are left alone).
     val base = s"${Artifacts.root}/publish"
-    val root = s"$base/${prefix}_${Artifacts.procTag}"
+    val root = s"$base/etl_${Artifacts.procTag}"
     locally {
       val bp = new org.apache.hadoop.fs.Path(base)
       val fs = bp.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(bp))
         fs.listStatus(bp).map(_.getPath)
-          .filter(p => p.getName.startsWith(prefix + "_") &&
-            Artifacts.isDeadProcessLeftover(p.getName))
+          .filter(p => Artifacts.isDeadProcessLeftover(p.getName))
           .foreach(p => fs.delete(p, true))
     }
     val c1 = cleanse(readRaw(s, RawCsv))

@@ -1198,7 +1198,7 @@ object Text {
     * paths (in-memory, distributed, sequential) pairwise equal. */
   def bpeTrainBatched(corpus: DataFrame, nMerges: Int,
                       batchK: Int = BpeBatchK,
-                      driverVocabLimit: Long = -1L,
+                      driverVocabLimit: Long = BpeDriverVocabLimit,
                       minFreq: Long = 1L): Seq[(String, String)] =
     bpeTrainBatchedStats(corpus, nMerges, batchK, driverVocabLimit,
       minFreq).merges
@@ -1216,13 +1216,9 @@ object Text {
       if (passes == 0) 0.0 else merges.size.toDouble / passes
   }
 
-  /** `driverVocabLimit < 0` (the default) resolves the in-memory-regime
-    * threshold from `spark.graft.bpe.driverVocabLimit` (conf), then
-    * `SPARK_GRAFT_BPE_DRIVER_LIMIT` (env), then [[BpeDriverVocabLimit]]
-    * — the VERDICT r16 #1 knob: a knob'd Verify run forces the declared
-    * 512-merge gates through the distributed path against unchanged
-    * oracles (CORRECTNESS_SELF_r17_bpedist). Explicit non-negative
-    * values (the spec pins) bypass the knob.
+  /** `driverVocabLimit` is the in-memory-regime threshold, default
+    * [[BpeDriverVocabLimit]]; `0` forces the distributed path (the
+    * TextSpec pins and BPELAB pass it directly).
     *
     * `minFreq` drops words rarer than the floor BEFORE training — the
     * production-tokenizer contract (every real trainer exposes
@@ -1243,20 +1239,15 @@ object Text {
     * wins (BPELAB_r17_sf10 prices both). */
   def bpeTrainBatchedStats(corpus: DataFrame, nMerges: Int,
                            batchK: Int = BpeBatchK,
-                           driverVocabLimit: Long = -1L,
+                           driverVocabLimit: Long = BpeDriverVocabLimit,
                            minFreq: Long = 1L,
                            measureDelta: Boolean = false,
                            incremental: Boolean = true): BpeTrainStats = {
-    val limit =
-      if (driverVocabLimit >= 0) driverVocabLimit
-      else corpus.sparkSession.conf.getOption("spark.graft.bpe.driverVocabLimit")
-        .orElse(sys.env.get("SPARK_GRAFT_BPE_DRIVER_LIMIT"))
-        .map(_.toLong).getOrElse(BpeDriverVocabLimit)
     val wfWords = corpus.select(explode(split(col("t"), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
       .where(col("n") >= minFreq)
-    if (wfWords.limit(limit.toInt + 1).count() <= limit) {
+    if (wfWords.limit(driverVocabLimit.toInt + 1).count() <= driverVocabLimit) {
       val m = bpeTrainInMemory(
         wfWords.collect().map(r => (r.getString(0), r.getLong(1))), nMerges)
       return BpeTrainStats(m, "driver", m.size)

@@ -1,66 +1,57 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Manifest-pointer MULTI-TABLE atomic publish — the one documented
-  * transactionality gap vs the reference (SURVEY §7.3): the reference
-  * wraps its 3-table load in a single transaction
-  * (`reference/scripts/load_once.py:24` `engine.begin()`), while
-  * per-table Parquet overwrites expose a window where a reader sees new
-  * facts next to old dims. The generation-pointer scheme closes it:
+/** Multi-table atomic publish — the one documented transactionality gap
+  * vs the reference (SURVEY §7.3): the reference wraps its 3-table load
+  * in a single transaction (`reference/scripts/load_once.py:24`
+  * `engine.begin()`), while per-table Parquet overwrites expose a window
+  * where a reader sees new facts next to old dims. The generation log
+  * closes it:
   *
   * ```
   * root/
   *   generations/gen-000007-<uuid>/   # all tables + _MANIFEST.json
-  *   CURRENT                          # one small file naming the live gen
+  *   _log/c-00000007.commit           # one immutable file naming a gen
   * ```
   *
   * Writers stage EVERY table of a generation under a fresh uniquely-named
-  * directory (never touched by readers — CURRENT does not name it yet),
-  * then swap the CURRENT pointer file in one atomic rename. Readers
-  * resolve CURRENT once and read all tables from that generation — they
-  * see the complete old set or the complete new set, never a mix. The
-  * crash window is benign by construction: a writer dying anywhere
-  * before the swap leaves CURRENT untouched (readers keep the old
-  * generation; the orphaned staging dir is swept later), and the swap
-  * itself is a single filesystem rename.
+  * directory (never touched by readers — no commit names it yet), then
+  * make it live by creating the next commit file `_log/c-<slot>.commit`
+  * (content = generation name) with create-if-absent. The live
+  * generation is the highest-slot READABLE commit; readers resolve it
+  * once and read all tables from that generation — they see the
+  * complete old set or the complete new set, never a mix. A writer dying
+  * anywhere before the commit leaves the log untouched (readers keep the
+  * old generation; the orphaned staging dir is swept later), and a
+  * crashed commit (no object on a real store; an empty or truncated file
+  * on a local one) is skipped by readers.
   *
-  * Durability scope: TWO commit protocols behind the same API (r16,
-  * VERDICT #4 — the r15 caveat closed).
-  *
-  *   - `pointer` — CURRENT pointer file swapped by atomic
-  *     rename-with-overwrite. Correct on HDFS and local filesystems,
-  *     where rename is atomic; the default for their schemes.
-  *   - `log` — a rename-FREE commit log for object stores, where
-  *     rename is copy+delete and the pointer swap would expose a
-  *     missing/partial-pointer window. Commits are immutable files
-  *     `_log/c-<slot>.commit` (content = generation name) created with
-  *     create-if-absent — the one primitive object stores offer
-  *     atomically (S3 conditional PUT `If-None-Match:*`, GCS
-  *     `ifGenerationMatch=0`, ABFS ETag preconditions). The live
-  *     generation is the highest-slot READABLE commit: a crashed PUT
-  *     (no object on a real store; an empty file on a simulated one)
-  *     is skipped, so readers only ever see complete commits. Slot
-  *     exclusivity is the CAS: a writer losing the create race
-  *     re-lists and retries the next slot, preserving last-wins.
-  *
-  * Protocol per root: `spark.graft.publish.protocol` (`pointer`|`log`)
-  * when set; else an existing `_log` directory (a log root stays a log
-  * root); else by scheme — file/hdfs/viewfs get `pointer`, anything
-  * else (s3a/gs/abfs/…) gets `log`. Data files are staged through the
-  * normal writer either way; on object stores that path pairs with a
-  * store-native committer (magic/EMRFS) — the protocol here is about
-  * what makes a staged generation LIVE, and in `log` mode that path
-  * performs no rename at all (PublishSpec drives it against a
-  * filesystem whose rename throws).
+  * No rename anywhere on the make-live path, so the same protocol is
+  * correct on local, HDFS and object-store roots: create-if-absent is
+  * the one primitive object stores offer atomically (S3 conditional PUT
+  * `If-None-Match:*`, GCS `ifGenerationMatch=0`, ABFS ETag
+  * preconditions), and PublishSpec drives the commit against a
+  * filesystem whose rename throws. Data files are staged through the
+  * normal writer; on object stores that path pairs with a store-native
+  * committer (magic/EMRFS).
   *
   * Single-writer assumption, like the reference's one ETL loader:
-  * concurrent publishers do not corrupt (staging dirs are unique,
-  * pointer swap is last-wins) but the loser's generation is silently
-  * superseded. Retention keeps the live generation plus its
-  * predecessor, so readers that resolved CURRENT just before a swap
-  * finish their scan against intact files.
+  * concurrent publishers do not corrupt (staging dirs are unique, a
+  * writer losing the slot race retries the next slot, so the last slot
+  * wins) but the loser's generation is silently superseded. One caveat
+  * the code does not show: Hadoop's local `RawLocalFileSystem.create(p,
+  * false)` calls `exists` and then opens the file — check-then-create,
+  * not an atomic create — so two concurrent LOCAL writers can, rarely,
+  * both write one slot. The slot then names whichever writer wrote last,
+  * and the loser is superseded, as above. (Should the data and its
+  * checksum sidecar come from different writers, the slot reads as torn
+  * and readers stay on the previous commit until the next one.) Either
+  * way readers see one complete generation. Retention keeps the live
+  * generation plus its predecessor, so readers that resolved the live
+  * commit just before a newer one finish their scan against intact
+  * files.
   */
 object Publish {
 
@@ -70,38 +61,7 @@ object Publish {
   private def genDir(root: String, gen: String) =
     new Path(s"$root/generations/$gen")
 
-  private def readPointer(s: SparkSession, p: Path): Option[String] = {
-    val f = fs(s, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      if (txt.isEmpty) None else Some(txt)
-    }
-  }
-
-  // ---- protocol selection -------------------------------------------
-
-  /** Schemes with ATOMIC rename-with-overwrite — the pointer protocol's
-    * correctness precondition. Everything else defaults to the log. */
-  private val RenameSafeSchemes = Set("file", "hdfs", "viewfs")
-
   private def logDir(root: String) = new Path(s"$root/_log")
-
-  /** Resolve the commit protocol for a root: explicit conf first, then
-    * root state (an existing log keeps the root on the log protocol so
-    * a conf unset can't strand readers), then scheme default. */
-  def protocolFor(s: SparkSession, root: String): String =
-    s.conf.getOption("spark.graft.publish.protocol").getOrElse {
-      val p = new Path(root)
-      val scheme = Option(fs(s, p).makeQualified(p).toUri.getScheme).getOrElse("file")
-      if (fs(s, logDir(root)).exists(logDir(root))) "log"
-      else if (RenameSafeSchemes(scheme)) "pointer"
-      else "log"
-    }
-
-  // ---- the rename-free commit log (object-store protocol) -----------
 
   private val CommitRe = "^c-(\\d{8})\\.commit$".r
 
@@ -139,79 +99,25 @@ object Publish {
       }
   }
 
-  /** Append a commit naming `gen`: create-if-absent on the next slot —
-    * the conditional-put CAS. Losing the race (slot already taken)
-    * re-lists and retries the NEXT slot, so concurrent publishers
-    * serialize and the last slot wins, same semantics as the pointer
-    * overwrite. No rename anywhere on this path. */
-  private def commitToLog(s: SparkSession, root: String, gen: String): Unit = {
-    val dir = logDir(root)
-    val f = fs(s, dir)
-    if (!f.exists(dir)) f.mkdirs(dir)
-    var attempts = 0
-    var done = false
-    while (!done) {
-      attempts += 1
-      require(attempts <= 16,
-        s"lost the commit-slot race 16 times under $root — a live writer storm")
-      val slot = readCommitSlotMax(s, root) + 1
-      val p = new Path(dir, f"c-$slot%08d.commit")
-      try {
-        val out = f.create(p, false) // create-if-absent: the CAS
-        out.write(gen.getBytes("UTF-8")); out.close()
-        done = true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => // retry next slot
-        case _: java.io.IOException if f.exists(p) => // local FS maps the collision to plain IOE
-      }
-    }
-  }
+  // ---- the read side -------------------------------------------------
 
-  /** Highest slot NUMBER present, readable or not — a torn commit still
-    * owns its slot (its creator holds the name), so writers must skip
-    * past it rather than collide forever. */
-  private def readCommitSlotMax(s: SparkSession, root: String): Int = {
-    val dir = logDir(root)
-    val f = fs(s, dir)
-    if (!f.exists(dir)) 0
-    else f.listStatus(dir).flatMap(st => st.getPath.getName match {
-      case CommitRe(n) => Some(n.toInt)
-      case _ => None
-    }).foldLeft(0)(math.max)
-  }
-
-  // ---- the read side, protocol-dispatched ----------------------------
-
-  /** The live generation name, if any generation was ever published.
-    * Log roots answer from the highest readable commit; pointer roots
-    * from CURRENT. A root carrying BOTH (mid-migration) prefers the log
-    * — the log only exists because a publish wrote it after the last
-    * pointer swap. */
+  /** The live generation name — the highest readable commit — if any
+    * generation was ever published. */
   def currentGen(s: SparkSession, root: String): Option[String] =
     readCommits(s, root).headOption.map(_._2)
-      .orElse(readPointer(s, new Path(s"$root/CURRENT")))
 
   /** The generation the previous commit named — what retention protects
-    * for in-flight readers of the old pointer. Log roots answer from the
-    * second-highest readable commit; pointer roots from PREVIOUS
-    * (written by [[swapPointer]] just before each swap). Inferring the
-    * predecessor from directory order instead is wrong: a staged-but-
-    * never-swapped orphan (writer crash between stage and swap) sorts
-    * newer than the real predecessor and would get kept in its place
-    * while the real one is deleted under live readers (ADVICE r15). */
-  def previousGen(s: SparkSession, root: String): Option[String] = {
-    val commits = readCommits(s, root)
-    if (commits.nonEmpty)
-      // mid-migration (one log commit over a legacy pointer root): the
-      // generation the pointer still names was live until that commit —
-      // it IS the predecessor in-flight pointer-readers hold
-      commits.lift(1).map(_._2)
-        .orElse(readPointer(s, new Path(s"$root/CURRENT")))
-    else readPointer(s, new Path(s"$root/PREVIOUS"))
-  }
+    * for in-flight readers of the old live generation: the second-highest
+    * readable commit. Inferring the predecessor from directory order
+    * instead is wrong: a staged-but-never-committed orphan (writer crash
+    * between stage and commit) sorts newer than the real predecessor and
+    * would get kept in its place while the real one is deleted under
+    * live readers (ADVICE r15). */
+  def previousGen(s: SparkSession, root: String): Option[String] =
+    readCommits(s, root).lift(1).map(_._2)
 
   /** Stage a complete generation (all tables + manifest) WITHOUT making
-    * it live — the crash-window half that EtlPublishSpec kills between.
+    * it live — the crash-window half PublishSpec kills between.
     * Returns the staged generation name. */
   def stageGeneration(s: SparkSession, root: String,
                       tables: Seq[(String, DataFrame)]): String = {
@@ -251,64 +157,60 @@ object Publish {
     gen
   }
 
-  /** Make a staged generation live, by the root's protocol. Pointer
-    * roots write the pointer beside CURRENT then atomically rename over
-    * it ([[FileContext]] supports rename-with-overwrite; plain
-    * `FileSystem.rename` refuses an existing destination, and
-    * delete-then-rename would open exactly the no-pointer window this
-    * module exists to close). Log roots append one create-if-absent
-    * commit — no rename on the path at all. */
-  def swapPointer(s: SparkSession, root: String, gen: String): Unit = {
+  /** Make a staged generation live: create-if-absent on the next log
+    * slot — the conditional-put CAS. Losing the race (slot already
+    * taken) re-lists and retries the NEXT slot, so concurrent publishers
+    * serialize and the last slot wins. No rename anywhere on this path. */
+  def commit(s: SparkSession, root: String, gen: String): Unit = {
     require(fs(s, genDir(root, gen)).exists(new Path(genDir(root, gen), "_MANIFEST.json")),
-      s"generation $gen has no manifest — stage before swapping")
-    if (protocolFor(s, root) == "log") commitToLog(s, root, gen)
-    else {
-      // Forcing protocol=pointer on a root that ever committed via the
-      // log would publish INVISIBLY — the read side prefers the log, so
-      // readers keep resolving the last log commit and the sweep then
-      // deletes the freshly swapped generation (ADVICE r16). Refuse
-      // loudly instead of going stale-but-consistent.
-      require(!fs(s, logDir(root)).exists(logDir(root)),
-        s"root $root carries a commit log (_log/): a pointer swap here would be " +
-          "invisible to readers — unset spark.graft.publish.protocol or keep the log protocol")
-      // Record the outgoing generation FIRST: PREVIOUS is what retention
-      // protects for in-flight readers of the old pointer. Crash between
-      // the two writes is benign — PREVIOUS then names the still-live
-      // generation, which the sweep keeps anyway.
-      currentGen(s, root).foreach(old => writePointer(s, root, "PREVIOUS", old))
-      writePointer(s, root, "CURRENT", gen)
+      s"generation $gen has no manifest — stage before committing")
+    val dir = logDir(root)
+    val f = fs(s, dir)
+    if (!f.exists(dir)) f.mkdirs(dir)
+    var attempts = 0
+    var done = false
+    while (!done) {
+      attempts += 1
+      require(attempts <= 16,
+        s"lost the commit-slot race 16 times under $root — a live writer storm")
+      val slot = readCommitSlotMax(s, root) + 1
+      val p = new Path(dir, f"c-$slot%08d.commit")
+      try {
+        val out = f.create(p, false) // create-if-absent: the CAS
+        out.write(gen.getBytes("UTF-8")); out.close()
+        done = true
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => // retry next slot
+        case _: java.io.IOException if f.exists(p) => // local FS maps the collision to plain IOE
+      }
     }
   }
 
-  /** Atomically (re)write a small pointer file: write-beside, then
-    * rename over ([[FileContext]] supports rename-with-overwrite; plain
-    * `FileSystem.rename` refuses an existing destination, and
-    * delete-then-rename would open exactly the no-pointer window this
-    * module exists to close). */
-  private def writePointer(s: SparkSession, root: String, name: String,
-                           value: String): Unit = {
-    val dst = new Path(s"$root/$name")
-    val f = fs(s, dst)
-    val tmp = new Path(s"$root/$name.tmp-${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = f.create(tmp, false)
-    out.write(value.getBytes("UTF-8")); out.close()
-    val qualified = f.makeQualified(dst)
-    val fc = FileContext.getFileContext(qualified.toUri, s.sparkContext.hadoopConfiguration)
-    fc.rename(f.makeQualified(tmp), qualified, Options.Rename.OVERWRITE)
+  /** Highest slot NUMBER present, readable or not — a torn commit still
+    * owns its slot (its creator holds the name), so writers must skip
+    * past it rather than collide forever. */
+  private def readCommitSlotMax(s: SparkSession, root: String): Int = {
+    val dir = logDir(root)
+    val f = fs(s, dir)
+    if (!f.exists(dir)) 0
+    else f.listStatus(dir).flatMap(st => st.getPath.getName match {
+      case CommitRe(n) => Some(n.toInt)
+      case _ => None
+    }).foldLeft(0)(math.max)
   }
 
-  /** Stage + swap + retention sweep: the multi-table atomic commit. */
+  /** Stage + commit + retention sweep: the multi-table atomic commit. */
   def publishGeneration(s: SparkSession, root: String,
                         tables: Seq[(String, DataFrame)]): String = {
     val gen = stageGeneration(s, root, tables)
-    swapPointer(s, root, gen)
+    commit(s, root, gen)
     sweep(s, root)
     gen
   }
 
-  /** Resolve CURRENT once and return every table of that generation —
+  /** Resolve the live generation once and return every table of it —
     * the all-or-nothing read view. Resolving per-table instead would
-    * re-open the very mixed-generation window the pointer closes. */
+    * re-open the very mixed-generation window the log closes. */
   def readGeneration(s: SparkSession, root: String): Map[String, DataFrame] = {
     val gen = currentGen(s, root).getOrElse(
       throw new IllegalStateException(s"no generation published under $root"))
@@ -324,40 +226,23 @@ object Publish {
   }
 
   /** Retention: keep the live generation and the generation the previous
-    * CURRENT actually named (in-flight readers of the old pointer —
-    * the PREVIOUS pointer, recorded at swap time). Everything else goes
-    * ONE AGE GRACE LATER (`spark.graft.publish.orphanGraceMs`, default
-    * 15 min — the vacuum-retention discipline), including staged-but-
-    * never-swapped orphans from crashed writers: no reader can be
-    * scanning a generation CURRENT never named, and they are NOT
-    * predecessors however new they sort (ADVICE r15). The grace exists
-    * for CONCURRENT writers (r17, PUBLISHLAB): a peer's staged-but-not-
-    * yet-committed generation is indistinguishable from a crashed
-    * writer's orphan at sweep time, and deleting it inside the peer's
-    * stage→commit window would turn the peer's commit into a lost
-    * publish. Roots written before PREVIOUS existed fall back to the
-    * newest generation strictly OLDER than live by generation number —
-    * an orphan (staged after live, so numbered >= live) can never be
-    * mistaken for the predecessor under that order either. */
+    * commit named (in-flight readers of the old live generation).
+    * Everything else goes ONE AGE GRACE LATER
+    * (`spark.graft.publish.orphanGraceMs`, default 15 min — the
+    * vacuum-retention discipline), including staged-but-never-committed
+    * orphans from crashed writers: no reader can be scanning a generation
+    * no commit ever named, and they are NOT predecessors however new they
+    * sort (ADVICE r15). The grace exists for CONCURRENT writers (r17,
+    * PUBLISHLAB): a peer's staged-but-not-yet-committed generation is
+    * indistinguishable from a crashed writer's orphan at sweep time, and
+    * deleting it inside the peer's stage→commit window would turn the
+    * peer's commit into a lost publish. */
   def sweep(s: SparkSession, root: String): Unit = {
     val gens = new Path(s"$root/generations")
     val f = fs(s, gens)
+    val commits = readCommits(s, root)
     if (f.exists(gens)) {
-      val live = currentGen(s, root)
-      val all = f.listStatus(gens).map(_.getPath.getName).sorted
-      def num(n: String): Int =
-        n.split("-").lift(1).flatMap(_.toIntOption).getOrElse(Int.MaxValue)
-      val pred = previousGen(s, root).filter(all.contains).orElse(
-        live.flatMap(l => all.filter(n => num(n) < num(l)).lastOption))
-      val keep = (live ++ pred).toSet
-      // Concurrent-writer safety (r17, PUBLISHLAB): a PEER's generation
-      // staged but not yet committed looks exactly like a crashed
-      // writer's orphan — a sweep racing the peer's stage→commit window
-      // would delete it, and the peer's commit would then name a missing
-      // directory: a lost publish. Orphans are deleted only past an age
-      // grace (default 15 min; a live stage→commit window is seconds) —
-      // the object-store vacuum-retention discipline. Crashed-writer
-      // leftovers still go, one grace period later.
+      val keep = commits.take(2).map(_._2).toSet
       val graceMs = s.conf.getOption("spark.graft.publish.orphanGraceMs")
         .map(_.toLong).getOrElse(15L * 60 * 1000)
       val now = System.currentTimeMillis()
@@ -366,19 +251,12 @@ object Publish {
         .filter(st => now - st.getModificationTime > graceMs)
         .foreach(st => f.delete(st.getPath, true))
     }
-    val rootP = new Path(root)
-    if (f.exists(rootP))
-      f.listStatus(rootP).map(_.getPath)
-        .filter(p => p.getName.startsWith("CURRENT.tmp-") ||
-          p.getName.startsWith("PREVIOUS.tmp-"))
-        .foreach(p => f.delete(p, false))
     // Log trim: drop commits below the predecessor's slot. Deleting an
     // immutable old commit is reader-safe (readers resolve the TOP
     // readable slot; anything below pred is at least two generations
     // stale) and keeps each publish's slot re-list O(recent). Torn
     // commits ABOVE pred stay until they age below it — they still own
     // their slot number for the writer CAS.
-    val commits = readCommits(s, root)
     if (commits.size > 1) {
       val keepFrom = commits(1)._1
       val dir = logDir(root)

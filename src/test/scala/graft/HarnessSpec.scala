@@ -87,7 +87,23 @@ class HarnessSpec extends AnyFunSuite {
     assert(dumped == SparkEntry.oracleSql)
     // the declared surface (ROADMAP north star): a query added or
     // dropped must move this pin on purpose
-    assert(dumped.size == 130)
+    assert(dumped.size == 129)
+  }
+
+  test("the sf10 sweep script names exactly the declared queries") {
+    // tools/sf10_verify.sh hands each CHUNKS line to Verify, which fails
+    // the whole chunk on one undeclared name and skips an unlisted one
+    val script = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("tools/sf10_verify.sh")), "UTF-8")
+    val chunks = script.substring(script.indexOf("CHUNKS=("))
+    val listed = "\"([^\"]*)\"".r
+      .findAllMatchIn(chunks.substring(0, chunks.indexOf("\n)")))
+      .flatMap(_.group(1).split("\\s+")).filter(_.nonEmpty).toSeq
+    assert(listed.distinct.size == listed.size, "a query is listed twice")
+    val undeclared = listed.toSet -- SparkEntry.queries.keySet
+    val unlisted = SparkEntry.queries.keySet -- listed
+    assert(undeclared.isEmpty && unlisted.isEmpty,
+      s"undeclared: ${undeclared.toSeq.sorted}; unlisted: ${unlisted.toSeq.sorted}")
   }
 
   test("value waivers name declared queries only: the one designed HLL waiver") {

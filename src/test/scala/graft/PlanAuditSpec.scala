@@ -471,12 +471,9 @@ class PlanAuditSpec extends SparkSpec {
       // sort; tokens512 is scan + kernel + presentation sort); the
       // star-CC variant's declared frame joins the checkpointed
       // components (iteration shuffles run at build time); hilbert =
-      // zorder3's box agg shape; publish_log = two 3-table lifecycle
-      // summaries over the published parquet (the log protocol adds no
-      // exchange over the pointer twin)
+      // zorder3's box agg shape
       "text_bpe_train512" -> 1, "text_tokens_bpe512" -> 1,
-      "dedup_clusters_stars" -> 5, "layout_hilbert" -> 3,
-      "etl_publish_log" -> 8)
+      "dedup_clusters_stars" -> 5, "layout_hilbert" -> 3)
     pins.foreach { case (name, pin) =>
       val n = executed(name).collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e

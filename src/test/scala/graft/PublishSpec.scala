@@ -2,10 +2,12 @@ package graft
 
 import graft.sources.Publish
 
-/** Crash-window semantics of the manifest-pointer multi-table commit
-  * (VERDICT r14 #5): a writer dying between table writes must leave
-  * readers on the complete OLD generation, and the pointer swap must
-  * flip all tables at once. */
+/** Crash-window semantics of the multi-table commit (VERDICT r14 #5): a
+  * writer dying between table writes must leave readers on the complete
+  * OLD generation, and one commit must flip all tables at once. The
+  * commit log is the only protocol, so every case runs under the default
+  * conf on plain local roots, except the one that swaps in a filesystem
+  * whose rename throws. */
 class PublishSpec extends SparkSpec {
   private lazy val sp = spark
   import sp.implicits._
@@ -27,7 +29,7 @@ class PublishSpec extends SparkSpec {
     Publish.publishGeneration(sp, root, Seq(
       "dim" -> Seq((1, "a")).toDF("id", "v"),
       "fact" -> Seq((1, 10L)).toDF("id", "x")))
-    // writer "crashes" here: generation 2 fully staged, pointer untouched
+    // writer "crashes" here: generation 2 fully staged, never committed
     Publish.stageGeneration(sp, root, Seq(
       "dim" -> Seq((1, "a"), (2, "b")).toDF("id", "v"),
       "fact" -> Seq((1, 10L), (2, 20L)).toDF("id", "x")))
@@ -44,46 +46,28 @@ class PublishSpec extends SparkSpec {
     val gen2 = Publish.stageGeneration(sp, root, Seq(
       "dim" -> Seq((1, "a"), (2, "b")).toDF("id", "v"),
       "fact" -> Seq((1, 10L), (2, 20L)).toDF("id", "x")))
-    Publish.swapPointer(sp, root, gen2)
+    Publish.commit(sp, root, gen2)
     val g = Publish.readGeneration(sp, root)
     assert(g("dim").count() == 2 && g("fact").count() == 2)
     assert(Publish.currentGen(sp, root).contains(gen2))
   }
 
-  test("retention keeps live + predecessor, drops older gens and tmp pointers") {
-    withGrace0 {
-    val root = freshRoot()
-    val gens = (1 to 3).map { i =>
-      Publish.publishGeneration(sp, root,
-        Seq("t" -> Seq((i, i.toLong)).toDF("id", "x")))
-    }
-    val dir = new java.io.File(s"$root/generations")
-    val onDisk = dir.listFiles().map(_.getName).toSet
-    assert(onDisk == Set(gens(1), gens(2)),
-      s"expected live+predecessor, got $onDisk")
-    assert(!new java.io.File(root).listFiles()
-      .exists(_.getName.startsWith("CURRENT.tmp-")), "tmp pointers swept")
-    // the live generation is the last published one
-    assert(Publish.readGeneration(sp, root)("t").head().getInt(0) == 3)
-    }
-  }
-
   test("a staged-but-never-swapped orphan is not mistaken for the predecessor") {
     // ADVICE r15 (medium): the old sweep inferred the predecessor as the
     // lexicographically-last NON-LIVE generation. A writer that crashed
-    // between stage and swap leaves an orphan that sorts NEWER than the
+    // between stage and commit leaves an orphan that sorts NEWER than the
     // real predecessor; the next publish's sweep then kept the orphan
-    // and deleted the generation in-flight readers of the old CURRENT
-    // may still be scanning. PREVIOUS (recorded at swap) names the real
-    // predecessor; the orphan — which no reader can hold, CURRENT never
-    // named it — is swept as a separate class.
+    // and deleted the generation in-flight readers of the old live
+    // generation may still be scanning. The second-highest commit names
+    // the real predecessor; the orphan — which no reader can hold, no
+    // commit ever named it — is swept as a separate class.
     withGrace0 {
     val root = freshRoot()
     Publish.publishGeneration(sp, root,
       Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
     val gen2 = Publish.publishGeneration(sp, root,
       Seq("t" -> Seq((2, 2L)).toDF("id", "x")))
-    // crashed writer: staged after gen2, never swapped
+    // crashed writer: staged after gen2, never committed
     val orphan = Publish.stageGeneration(sp, root,
       Seq("t" -> Seq((99, 99L)).toDF("id", "x")))
     val gen3 = Publish.publishGeneration(sp, root,
@@ -92,7 +76,7 @@ class PublishSpec extends SparkSpec {
       .listFiles().map(_.getName).toSet
     assert(onDisk == Set(gen2, gen3),
       s"retention must keep the REAL predecessor $gen2 (in-flight readers) " +
-        s"and drop the never-swapped orphan $orphan, got $onDisk")
+        s"and drop the never-committed orphan $orphan, got $onDisk")
     assert(Publish.previousGen(sp, root).contains(gen2))
     }
   }
@@ -114,28 +98,22 @@ class PublishSpec extends SparkSpec {
     assert(onDisk.contains(staged),
       s"a seconds-old staged generation must survive a peer's sweep, got $onDisk")
     // ... and the staged generation can still be committed afterwards
-    Publish.swapPointer(sp, root, staged)
+    Publish.commit(sp, root, staged)
     assert(Publish.currentGen(sp, root).contains(staged))
   }
 
   test("swap refuses a generation without a manifest; empty root refuses reads") {
     val root = freshRoot()
     intercept[IllegalArgumentException] {
-      Publish.swapPointer(sp, root, "gen-000099-deadbeef")
+      Publish.commit(sp, root, "gen-000099-deadbeef")
     }
     intercept[IllegalStateException] { Publish.readGeneration(sp, root) }
   }
 
-  // ---- the rename-free commit-log protocol (VERDICT r15 #4) -----------
-
-  /** Run `body` with the log protocol forced via conf, restoring after. */
-  private def withLog[T](body: => T): T = {
-    sp.conf.set("spark.graft.publish.protocol", "log")
-    try body finally sp.conf.unset("spark.graft.publish.protocol")
-  }
+  // ---- the rename-free commit log (VERDICT r15 #4) --------------------
 
   test("log protocol: publish/read/retention end-to-end, no pointer files") {
-    withLog { withGrace0 {
+    withGrace0 {
       val root = freshRoot()
       val gens = (1 to 3).map { i =>
         Publish.publishGeneration(sp, root,
@@ -145,22 +123,22 @@ class PublishSpec extends SparkSpec {
       assert(Publish.previousGen(sp, root).contains(gens(1)))
       assert(Publish.readGeneration(sp, root)("t").head().getInt(0) == 3)
       val rootFiles = new java.io.File(root).listFiles().map(_.getName).toSet
-      assert(!rootFiles("CURRENT") && !rootFiles("PREVIOUS"),
-        s"log roots must not write pointer files, got $rootFiles")
+      assert(rootFiles == Set("generations", "_log"),
+        s"a local root holds only generations and the log, got $rootFiles")
       val onDisk = new java.io.File(s"$root/generations")
         .listFiles().map(_.getName).toSet
       assert(onDisk == Set(gens(1), gens(2)),
-        s"retention keeps live+predecessor under the log too, got $onDisk")
+        s"retention keeps live+predecessor and drops older gens, got $onDisk")
       // log trimmed to [pred, live]
       val slots = new java.io.File(s"$root/_log").listFiles().map(_.getName)
         .filter(_.endsWith(".commit")).sorted
       assert(slots.toSeq == Seq("c-00000002.commit", "c-00000003.commit"),
         s"got ${slots.toSeq}")
-    } }
+    }
   }
 
   test("log protocol: staged-but-never-committed orphan leaves readers untouched and sweeps") {
-    withLog { withGrace0 {
+    withGrace0 {
       val root = freshRoot()
       val gen1 = Publish.publishGeneration(sp, root,
         Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
@@ -176,46 +154,42 @@ class PublishSpec extends SparkSpec {
         .listFiles().map(_.getName).toSet
       assert(onDisk == Set(gen1, gen3),
         s"sweep keeps {live=$gen3, pred=$gen1}, drops orphan $orphan: $onDisk")
-    } }
+    }
   }
 
   test("log protocol: losing the commit-slot CAS retries the next slot (last-wins kept)") {
-    withLog {
-      val root = freshRoot()
-      Publish.publishGeneration(sp, root,
-        Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
-      // a racing writer takes the next slot first (format-valid name:
-      // readers validate commit content against the gen-name pattern
-      // since the r17 torn-commit closure)
-      val racerGen = "gen-000099-deadbeef"
-      val racer = new java.io.File(s"$root/_log/c-00000002.commit")
-      java.nio.file.Files.writeString(racer.toPath, racerGen)
-      val gen = Publish.stageGeneration(sp, root,
-        Seq("t" -> Seq((2, 2L)).toDF("id", "x")))
-      Publish.swapPointer(sp, root, gen)
-      assert(Publish.currentGen(sp, root).contains(gen),
-        "the later writer must land on slot 3 and win")
-      assert(Publish.previousGen(sp, root).contains(racerGen))
-    }
+    val root = freshRoot()
+    Publish.publishGeneration(sp, root,
+      Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
+    // a racing writer takes the next slot first (format-valid name:
+    // readers validate commit content against the gen-name pattern
+    // since the r17 torn-commit closure)
+    val racerGen = "gen-000099-deadbeef"
+    val racer = new java.io.File(s"$root/_log/c-00000002.commit")
+    java.nio.file.Files.writeString(racer.toPath, racerGen)
+    val gen = Publish.stageGeneration(sp, root,
+      Seq("t" -> Seq((2, 2L)).toDF("id", "x")))
+    Publish.commit(sp, root, gen)
+    assert(Publish.currentGen(sp, root).contains(gen),
+      "the later writer must land on slot 3 and win")
+    assert(Publish.previousGen(sp, root).contains(racerGen))
   }
 
   test("log protocol: a torn top commit (interrupted PUT) is skipped by readers") {
-    withLog {
-      val root = freshRoot()
-      val gen1 = Publish.publishGeneration(sp, root,
-        Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
-      // simulated interrupted PUT: the slot name exists, zero bytes
-      val torn = new java.io.File(s"$root/_log/c-00000002.commit")
-      assert(torn.createNewFile())
-      assert(Publish.currentGen(sp, root).contains(gen1),
-        "an unreadable commit is not a commit")
-      assert(Publish.readGeneration(sp, root)("t").head().getInt(0) == 1)
-      // and the next writer skips PAST the torn slot, never colliding
-      val gen3 = Publish.publishGeneration(sp, root,
-        Seq("t" -> Seq((3, 3L)).toDF("id", "x")))
-      assert(Publish.currentGen(sp, root).contains(gen3))
-      assert(new java.io.File(s"$root/_log/c-00000003.commit").exists())
-    }
+    val root = freshRoot()
+    val gen1 = Publish.publishGeneration(sp, root,
+      Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
+    // simulated interrupted PUT: the slot name exists, zero bytes
+    val torn = new java.io.File(s"$root/_log/c-00000002.commit")
+    assert(torn.createNewFile())
+    assert(Publish.currentGen(sp, root).contains(gen1),
+      "an unreadable commit is not a commit")
+    assert(Publish.readGeneration(sp, root)("t").head().getInt(0) == 1)
+    // and the next writer skips PAST the torn slot, never colliding
+    val gen3 = Publish.publishGeneration(sp, root,
+      Seq("t" -> Seq((3, 3L)).toDF("id", "x")))
+    assert(Publish.currentGen(sp, root).contains(gen3))
+    assert(new java.io.File(s"$root/_log/c-00000003.commit").exists())
   }
 
   test("log protocol: a torn NON-empty commit (truncated gen name) is skipped too") {
@@ -223,44 +197,21 @@ class PublishSpec extends SparkSpec {
     // generation name — content that fails the gen-name format must
     // read as not-yet-committed, exactly like the zero-byte case, or
     // readGeneration dies on a nonexistent dir.
-    withLog {
-      val root = freshRoot()
-      val gen1 = Publish.publishGeneration(sp, root,
-        Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
-      val torn = new java.io.File(s"$root/_log/c-00000002.commit")
-      java.nio.file.Files.writeString(torn.toPath, gen1.take(9)) // truncated
-      assert(Publish.currentGen(sp, root).contains(gen1),
-        "a truncated commit is not a commit")
-      assert(Publish.readGeneration(sp, root)("t").head().getInt(0) == 1)
-    }
-  }
-
-  test("forcing protocol=pointer on a log root is refused, not silently stale") {
-    // ADVICE r16: the read side prefers the log, so a forced pointer
-    // swap would be invisible and the sweep would delete the swapped
-    // generation. swapPointer must refuse the misconfiguration loudly.
     val root = freshRoot()
-    val gen1 = withLog {
-      Publish.publishGeneration(sp, root,
-        Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
-    }
-    val orphan = Publish.stageGeneration(sp, root,
-      Seq("t" -> Seq((2, 2L)).toDF("id", "x")))
-    sp.conf.set("spark.graft.publish.protocol", "pointer")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Publish.swapPointer(sp, root, orphan)
-      }
-      assert(e.getMessage.contains("commit log"))
-      assert(Publish.currentGen(sp, root).contains(gen1), "reads unchanged")
-    } finally sp.conf.unset("spark.graft.publish.protocol")
+    val gen1 = Publish.publishGeneration(sp, root,
+      Seq("t" -> Seq((1, 1L)).toDF("id", "x")))
+    val torn = new java.io.File(s"$root/_log/c-00000002.commit")
+    java.nio.file.Files.writeString(torn.toPath, gen1.take(9)) // truncated
+    assert(Publish.currentGen(sp, root).contains(gen1),
+      "a truncated commit is not a commit")
+    assert(Publish.readGeneration(sp, root)("t").head().getInt(0) == 1)
   }
 
   test("log protocol: commit path never renames (simulated object store)") {
     withGrace0 {
-    // The whole point: on a filesystem whose rename THROWS, the log
-    // protocol's make-live path (manifest check -> commit -> resolve ->
-    // sweep) completes. The generation is hand-staged through the FS API
+    // The whole point: on a filesystem whose rename THROWS, the
+    // make-live path (manifest check -> commit -> resolve -> sweep)
+    // completes, with no conf set. The generation is hand-staged through the FS API
     // because Spark's parquet job committer renames by design — on a
     // real store that half pairs with a store-native committer.
     val hconf = sp.sparkContext.hadoopConfiguration
@@ -280,11 +231,11 @@ class PublishSpec extends SparkSpec {
       out.close()
     }
     handStage("gen-000001-aaaaaaaa")
-    Publish.swapPointer(sp, root, "gen-000001-aaaaaaaa") // scheme default: log
+    Publish.commit(sp, root, "gen-000001-aaaaaaaa")
     handStage("gen-000002-bbbbbbbb")
-    Publish.swapPointer(sp, root, "gen-000002-bbbbbbbb")
+    Publish.commit(sp, root, "gen-000002-bbbbbbbb")
     handStage("gen-000003-cccccccc")
-    Publish.swapPointer(sp, root, "gen-000003-cccccccc")
+    Publish.commit(sp, root, "gen-000003-cccccccc")
     Publish.sweep(sp, root)
     assert(Publish.currentGen(sp, root).contains("gen-000003-cccccccc"))
     assert(Publish.previousGen(sp, root).contains("gen-000002-bbbbbbbb"))
@@ -295,21 +246,15 @@ class PublishSpec extends SparkSpec {
     }
   }
 
-  test("log protocol: migration from a legacy pointer root keeps the pointer gen as predecessor") {
+  test("a generation carrying a 0-row table publishes and reads back with its schema") {
     val root = freshRoot()
-    val gen1 = Publish.publishGeneration(sp, root,
-      Seq("t" -> Seq((1, 1L)).toDF("id", "x"))) // pointer protocol
-    assert(new java.io.File(s"$root/CURRENT").exists())
-    val gen2 = withLog {
-      Publish.publishGeneration(sp, root,
-        Seq("t" -> Seq((2, 2L)).toDF("id", "x")))
-    }
-    // conf now UNSET: the existing _log keeps the root on the log protocol
-    assert(Publish.protocolFor(sp, root) == "log")
-    assert(Publish.currentGen(sp, root).contains(gen2), "log outranks pointer")
-    assert(Publish.previousGen(sp, root).contains(gen1),
-      "the legacy pointer's gen is the predecessor in-flight readers hold")
-    assert(new java.io.File(s"$root/generations/$gen1").exists(),
-      "sweep must have kept the pointer-era predecessor")
+    val empty = Seq.empty[(Int, Long)].toDF("id", "x")
+    Publish.publishGeneration(sp, root, Seq(
+      "dim" -> Seq((1, "a")).toDF("id", "v"),
+      "fact" -> empty))
+    val g = Publish.readGeneration(sp, root)
+    assert(g("fact").count() == 0 && g("dim").count() == 1)
+    assert(g("fact").schema.map(f => f.name -> f.dataType) ==
+      empty.schema.map(f => f.name -> f.dataType))
   }
 }

@@ -1,7 +1,9 @@
 #!/bin/bash
 # Chunked sf10 verify: fresh JVM per family chunk so shuffle spill files
-# are reclaimed between chunks (a single 106-query JVM accumulated ~80 GB
-# of spills at sf10 and hit ENOSPC). Natural mode: check.py globs parts.
+# are reclaimed between chunks (one JVM running every declared query
+# accumulated ~80 GB of spills at sf10 and hit ENOSPC). Natural mode:
+# check.py globs parts. HarnessSpec checks that CHUNKS lists exactly the
+# declared queries.
 set -u
 SF=${SF:-testdata-sf10}
 OUT=${OUT:-verify_out_r10_sf10}
@@ -10,7 +12,7 @@ CHUNKS=(
   "dedup_exact dedup_minhash dedup_simhash dedup_fuzzy dedup_fuzzy2"
   "dedup_jaccard dedup_embed_scaled dedup_embed_planted dedup_incremental dedup_incremental_compacted"
   "dedup_clusters dedup_clusters_stars"
-  "etl_cleanse etl_count etl_dedup_employees etl_dim_upsert etl_employee_upsert etl_fact_upsert etl_publish etl_publish_log etl_quarantine etl_scd2 etl_snapshot_diff etl_surrogate_keys etl_union_evolve"
+  "etl_cleanse etl_count etl_dedup_employees etl_dim_upsert etl_employee_upsert etl_fact_upsert etl_publish etl_quarantine etl_scd2 etl_snapshot_diff etl_surrogate_keys etl_union_evolve"
   "events_asof events_asof_inner events_asof_multi events_asof_native events_attribution events_cdc events_funnel events_interval"
   "events_new_users events_props events_rolling events_sessions events_slo events_spike events_transitions events_wau events_window events_window_sliding"
   "join_anti join_basket join_salted join_semi join_skew_aqe"
