@@ -52,6 +52,28 @@ class PublishSpec extends SparkSpec {
     assert(Publish.currentGen(sp, root).contains(gen2))
   }
 
+  test("retention keeps live + predecessor, drops older gens and tmp pointers") {
+    withGrace0 {
+    val root = freshRoot()
+    val gens = (1 to 3).map { i =>
+      Publish.publishGeneration(sp, root,
+        Seq("t" -> Seq((i, i.toLong)).toDF("id", "x")))
+    }
+    val dir = new java.io.File(s"$root/generations")
+    val onDisk = dir.listFiles().map(_.getName).toSet
+    assert(onDisk == Set(gens(1), gens(2)),
+      s"expected live+predecessor, got $onDisk")
+    // the log commits by a direct PUT, so no temporary pointer or commit
+    // file may be left behind at the root or in the log
+    val leftovers = Seq(new java.io.File(root), new java.io.File(s"$root/_log"))
+      .flatMap(_.listFiles().map(_.getName))
+      .filter(n => n.startsWith("CURRENT") || n.contains(".tmp"))
+    assert(leftovers.isEmpty, s"tmp pointers swept, got $leftovers")
+    // the live generation is the last published one
+    assert(Publish.readGeneration(sp, root)("t").head().getInt(0) == 3)
+    }
+  }
+
   test("a staged-but-never-swapped orphan is not mistaken for the predecessor") {
     // ADVICE r15 (medium): the old sweep inferred the predecessor as the
     // lexicographically-last NON-LIVE generation. A writer that crashed
