@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.StorageBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -69,18 +70,6 @@ object AsOfLab {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         taskMs.addAndGet(t.taskInfo.duration)
     })
-    // async listener bus: poll until the task-time total stops moving
-    def quiesce(): Long = {
-      var prev = -1L; var stable = 0
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (stable < 2 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val cur = taskMs.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      taskMs.get()
-    }
-
     /** Consume every row of the frame's physical plan; returns row count.
       * Draining `executedPlan.execute()` directly keeps the exchanges and
       * sorts in the measured plan — a `count()` would prune them away. */
@@ -98,7 +87,8 @@ object AsOfLab {
         val t0 = System.nanoTime()
         val rows = drain(mk())
         val wall = (System.nanoTime() - t0) / 1e9
-        val ts = quiesce() / 1e3
+        StorageBridge.awaitListeners(spark.sparkContext) // async bus
+        val ts = taskMs.get() / 1e3
         if (best == null || wall < best.wall) best = Arm(wall, ts, rows)
       }
       best

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Text
 import graft.plans.GraftExtensions
+import org.apache.spark.graftbridge.StorageBridge
 
 /** BPE vocab-axis measurement (backing the r16 scale claims with numbers
   * rather than scaladoc):
@@ -77,8 +78,8 @@ object BpeLab {
 
     // Spark-job counter: the honest scheduling-cost unit for the
     // jobs-per-merge claims below (includes checkpoints and collects,
-    // not just the stats passes). The listener bus is async — settle
-    // briefly before reading.
+    // not just the stats passes). The listener bus is async — drain it
+    // before each read.
     val jobCount = new java.util.concurrent.atomic.AtomicInteger()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -87,9 +88,11 @@ object BpeLab {
       }
     })
     def countingJobs[T](f: => T): (T, Int) = {
-      Thread.sleep(300); val before = jobCount.get()
+      StorageBridge.awaitListeners(spark.sparkContext)
+      val before = jobCount.get()
       val r = f
-      Thread.sleep(300); (r, jobCount.get() - before)
+      StorageBridge.awaitListeners(spark.sparkContext)
+      (r, jobCount.get() - before)
     }
 
     // training batch rates, distributed regime forced on both shapes —
@@ -118,26 +121,6 @@ object BpeLab {
     val ((floorStats, floorJobs), floorSec) = timed(countingJobs(
       Text.bpeTrainBatchedStats(corpus, 512, minFreq = 2)))
 
-    // CROSSOVER arm: the delta machinery costs a constant extra shuffle
-    // per pass, so on the toy 1550-word gate table full recompute wins —
-    // the honest question is the REAL-vocabulary regime. The unbounded
-    // corpus's word table (vocabAll rows, > the 2^17 driver limit) takes
-    // the distributed path at the default split. The window must reach
-    // past the ubiquitous early merges (matched fraction ~1 while digit
-    // pairs live in every key word; the fraction decays with merge
-    // index — THAT decay is what the delta converts into savings), so
-    // the arm trains CROSS_MERGES merges under incremental level-1
-    // maintenance vs the r16 full-recompute shape.
-    val crossMerges = sys.env.getOrElse("SPARK_GRAFT_BPELAB_CROSS", "64").toInt
-    val ((incStats, incJobs), incSec) = timed(countingJobs(
-      Text.bpeTrainBatchedStats(corpus, crossMerges, measureDelta = true)))
-    require(incStats.regime == "distributed",
-      s"crossover arm expects the distributed regime at vocab=$vocabAll")
-    val ((fullStats, fullJobs), fullSec) = timed(countingJobs(
-      Text.bpeTrainBatchedStats(corpus, crossMerges, incremental = false)))
-    require(incStats.merges == fullStats.merges,
-      "both stats modes must learn the identical list")
-
     def fr(d: Seq[Double]): String =
       if (d.isEmpty) "null"
       else f"""{"mean":${d.sum / d.size}%.4f,"max":${d.max}%.4f}"""
@@ -145,7 +128,7 @@ object BpeLab {
       f""""$v":{"tokens":$tok,"sec":$sec%.2f,"mtok_per_sec":${tok / sec / 1e6}%.2f}"""
     }.mkString("{", ",", "}")
     val json =
-      f"""{"experiment":"bpe_vocab_axis","sf":"$sfDir","corpus_rows":$rows,"scan_floor_sec":$scanSec%.2f,"apply_kernel":$kernelJson,"apply_chain24":{"tokens":$chainTok,"sec":$chainSec%.2f,"mtok_per_sec":${chainTok / chainSec / 1e6}%.2f},"train_distributed":{"entity_digitchain":{"merges":${entStats.merges.size},"passes":${entStats.passes},"merges_per_pass":${entStats.mergesPerPass}%.2f,"jobs":$entJobs,"jobs_per_merge":${entJobs.toDouble / math.max(1, entStats.merges.size)}%.2f,"delta_frac":${fr(entStats.deltaFracs)},"sec":$entSec%.1f},"documents_letters":{"merges":${docStats.merges.size},"passes":${docStats.passes},"merges_per_pass":${docStats.mergesPerPass}%.2f,"jobs":$docJobs,"jobs_per_merge":${docJobs.toDouble / math.max(1, docStats.merges.size)}%.2f,"delta_frac":${fr(docStats.deltaFracs)},"sec":$docSec%.1f}},"floor_arm":{"vocab":$vocabAll,"vocab_floored":$vocabFloored,"regime":"${floorStats.regime}","merges":${floorStats.merges.size},"jobs":$floorJobs,"jobs_per_merge":${floorJobs.toDouble / math.max(1, floorStats.merges.size)}%.4f,"sec":$floorSec%.1f},"crossover_arm":{"vocab":$vocabAll,"merges":$crossMerges,"incremental":{"passes":${incStats.passes},"jobs":$incJobs,"delta_frac":${fr(incStats.deltaFracs)},"sec":$incSec%.1f},"full_recompute":{"passes":${fullStats.passes},"jobs":$fullJobs,"sec":$fullSec%.1f}}}"""
+      f"""{"experiment":"bpe_vocab_axis","sf":"$sfDir","corpus_rows":$rows,"scan_floor_sec":$scanSec%.2f,"apply_kernel":$kernelJson,"apply_chain24":{"tokens":$chainTok,"sec":$chainSec%.2f,"mtok_per_sec":${chainTok / chainSec / 1e6}%.2f},"train_distributed":{"entity_digitchain":{"merges":${entStats.merges.size},"passes":${entStats.passes},"merges_per_pass":${entStats.mergesPerPass}%.2f,"jobs":$entJobs,"jobs_per_merge":${entJobs.toDouble / math.max(1, entStats.merges.size)}%.2f,"delta_frac":${fr(entStats.deltaFracs)},"sec":$entSec%.1f},"documents_letters":{"merges":${docStats.merges.size},"passes":${docStats.passes},"merges_per_pass":${docStats.mergesPerPass}%.2f,"jobs":$docJobs,"jobs_per_merge":${docJobs.toDouble / math.max(1, docStats.merges.size)}%.2f,"delta_frac":${fr(docStats.deltaFracs)},"sec":$docSec%.1f}},"floor_arm":{"vocab":$vocabAll,"vocab_floored":$vocabFloored,"regime":"${floorStats.regime}","merges":${floorStats.merges.size},"jobs":$floorJobs,"jobs_per_merge":${floorJobs.toDouble / math.max(1, floorStats.merges.size)}%.4f,"sec":$floorSec%.1f}}"""
     println(json)
     java.nio.file.Files.write(java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BPELAB_OUT", "bpelab.json")),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.StorageBridge
 import org.apache.spark.sql.functions._
 
 /** The media_decode parallelism curve (VERDICT r11 #7, carried through
@@ -107,18 +108,10 @@ object MediaLab {
           (wall, row.getDecimal(0).toString)
         }
         once() // per-arm warm rep: plan codegen out of the measured reps
-        def settle(): Unit = { // listener bus is async
-          var prev = -1L; var same = 0
-          while (same < 2) {
-            Thread.sleep(150)
-            val now = runMs.get() + cpuNs.get()
-            if (now == prev) same += 1 else { same = 0; prev = now }
-          }
-        }
-        settle()
+        StorageBridge.awaitListeners(spark.sparkContext) // async bus
         runMs.set(0); cpuNs.set(0); gcMs.set(0)
         val runs = (1 to reps).map(_ => once())
-        settle()
+        StorageBridge.awaitListeners(spark.sparkContext)
         require(runs.map(_._2).distinct.size == 1,
           s"fingerprint drifted across reps at k=$k")
         (runs.map(_._1).min, runs.head._2,

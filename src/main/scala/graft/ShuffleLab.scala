@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.StorageBridge
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
@@ -79,17 +80,6 @@ object ShuffleLab {
     })
     def resetCounters(): Unit =
       Seq(shufWrite, shufRead, shufRecords, inputBytes).foreach(_.set(0))
-    /** The listener bus is async: wait until the write counter is stable
-      * across two 300 ms windows before trusting the totals. */
-    def quiesce(): Unit = {
-      var prev = -1L
-      var same = 0
-      while (same < 2) {
-        Thread.sleep(300)
-        val now = shufWrite.get() + shufRead.get() + inputBytes.get()
-        if (now == prev) same += 1 else { same = 0; prev = now }
-      }
-    }
     def sweep(): Unit = {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
@@ -112,7 +102,7 @@ object ShuffleLab {
       builds(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      quiesce()
+      StorageBridge.awaitListeners(spark.sparkContext) // async bus
       results(name) =
         f"""{"wall_sec":$wall%.2f,"shuffle_write_bytes":${shufWrite.get()},"shuffle_read_bytes":${shufRead.get()},"shuffle_records":${shufRecords.get()},"input_bytes":${inputBytes.get()}}"""
       println(f"[shufflelab] $name: wall=$wall%.2fs " +

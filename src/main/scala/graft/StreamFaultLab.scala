@@ -27,7 +27,8 @@ import scala.jdk.CollectionConverters._
   *
   * Shape under test: `Streams.hourlyWindows` (watermarked windowed agg —
   * per-window state store entries, Complete-mode memory sink), fed from
-  * time-aligned chunk FILES (the StreamEq r11 staging — no driver
+  * time-aligned chunk FILES (the r11 stream ≡ batch staging of
+  * `STREAMEQ_r11.json`, whose harness is at commit `795cadb` — no driver
   * collect). The kill fires between micro-batch k=0 and k=1, the
   * deterministic point where chunk-0 state is durable in the checkpoint
   * and every later batch must merge into reloaded state; a mid-task kill
@@ -65,7 +66,8 @@ object StreamFaultLab {
       .select("event_id", "ts", "user_id", "event_type", "value")
     val evSchema: StructType = eventsDf.schema
 
-    // StreamEq r11 staging: time-aligned chunks via one distributed write.
+    // The r11 stream ≡ batch staging (STREAMEQ_r11.json, harness at commit
+    // 795cadb): time-aligned chunks via one distributed write.
     val dom = eventsDf
       .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).collect()(0)
     val (usLo, usHi) = (dom.getLong(0), dom.getLong(1))

@@ -120,11 +120,7 @@ object Decontam {
     * correctly below the 0.95 bar; the same planted-twin discipline as
     * `dedup_embed_planted`). */
   def embedReport(s: SparkSession, dir: String): DataFrame = {
-    val base = Similarity.prepared(s, dir).drop("label")
-    val bench = base.filter(isBench(col("vec_id")))
-    val train = base.filter(!isBench(col("vec_id")))
-      .unionByName(bench.withColumn("vec_id",
-        col("vec_id") + lit(Dedup.PlantOffset)))
+    val (bench, train) = plantedSides(s, dir)
     val wide = graft.plans.GraftExtensions.SignBandsWideName
     val tb = Dedup.embedBands(s, train, wide).toDF("train_id", "k", "bv")
     val bb = broadcast(Dedup.embedBands(s, bench, wide).toDF("bench_id", "k", "bv"))
@@ -139,6 +135,17 @@ object Decontam {
         d(col("it"), col("ib")).cast("double") / (col("nt") * col("nb")))
       .filter(col("cosine") >= Dedup.ScaledThreshold)
       .select("train_id", "bench_id", "cosine")
+  }
+
+  /** The (bench, train) sides of [[embedReport]]: prepared vectors
+    * (vec_id, ie, nrm), the train side carrying the planted replicas. */
+  def plantedSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val base = Similarity.prepared(s, dir).drop("label")
+    val bench = base.filter(isBench(col("vec_id")))
+    val train = base.filter(!isBench(col("vec_id")))
+      .unionByName(bench.withColumn("vec_id",
+        col("vec_id") + lit(Dedup.PlantOffset)))
+    (bench, train)
   }
 
   def qEmbedReport(s: SparkSession, dir: String): DataFrame =

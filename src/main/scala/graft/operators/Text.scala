@@ -1229,20 +1229,11 @@ object Text {
     * operator's declared semantics: the floor gates' oracles prune
     * identically (HAVING COUNT(*) >= floor), so the gate stays
     * hash-exact. */
-  /** `incremental = false` recomputes the level-1 stats from the full
-    * word table every pass (the r16 shape) instead of carrying + delta-
-    * updating it — kept for BPELAB's crossover measurement: the delta
-    * machinery costs a constant extra shuffle per pass, so on a TOY
-    * word table (the 1550-word bounded gate corpus) full recompute is
-    * cheaper, while on a real vocabulary (the sf10 unbounded corpus's
-    * 1.5M words) the per-pass full explode dominates and the delta path
-    * wins (BPELAB_r17_sf10 prices both). */
   def bpeTrainBatchedStats(corpus: DataFrame, nMerges: Int,
                            batchK: Int = BpeBatchK,
                            driverVocabLimit: Long = BpeDriverVocabLimit,
                            minFreq: Long = 1L,
-                           measureDelta: Boolean = false,
-                           incremental: Boolean = true): BpeTrainStats = {
+                           measureDelta: Boolean = false): BpeTrainStats = {
     val wfWords = corpus.select(explode(split(col("t"), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
@@ -1286,8 +1277,10 @@ object Text {
     // contains() scan + an explode/shuffle over the MATCHED slice only,
     // instead of the full-corpus explode the r16 loop paid per pass
     // (the "512 merges = 320 vocab-sized jobs" wall; BPELAB_r17 records
-    // the measured matched fraction per pass).
-    var lvl1 = if (incremental) lvl1Of(wf).localCheckpoint() else null
+    // the measured matched fraction per pass, and BPELAB_r17_sf10 prices
+    // the r16 full-recompute shape at 327.4 s against this path's 244.9 s
+    // for 64 merges over 1.5 M words; that shape is at commit 795cadb).
+    var lvl1 = lvl1Of(wf).localCheckpoint()
     val deltaFracs = scala.collection.mutable.ArrayBuffer[Double]()
     lazy val totalWords: Long = wf.count()
     val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
@@ -1295,10 +1288,8 @@ object Text {
     var uncut = 0 // replace nodes since the last plan cut
     while (!done && out.size < nMerges) {
       // stats job over the CHECKPOINTED level-1 table (pair-table-sized,
-      // corpus-independent); the non-incremental comparison arm
-      // recomputes level 1 from the full word table instead
-      val stats = (if (incremental) lvl1 else lvl1Of(wf))
-        .groupBy("x", "y")
+      // corpus-independent)
+      val stats = lvl1.groupBy("x", "y")
         .agg(sum(when(col("side") === "P", col("cn")).otherwise(0L)).as("cnt"),
           max(when(col("side") =!= "P", col("cn"))).as("ubn"))
         .where(col("cnt") > 0)
@@ -1362,17 +1353,15 @@ object Text {
         val matchCond = batch.map { case (x, y) =>
           col("sq").contains(BpeD1 + x + BpeD2 + BpeD1 + y + BpeD2)
         }.reduce(_ || _)
-        if (incremental) {
-          val matched = wf.where(matchCond)
-          if (measureDelta)
-            deltaFracs += matched.count().toDouble / math.max(1L, totalWords)
-          val delta = lvl1Of(matched.withColumn("n", -col("n")))
-            .unionByName(lvl1Of(rewrite(matched)))
-          lvl1 = lvl1.unionByName(delta)
-            .groupBy("x", "y", "side", "ctx").agg(sum("cn").as("cn"))
-            .where(col("cn") =!= 0L)
-            .localCheckpoint()
-        }
+        val matched = wf.where(matchCond)
+        if (measureDelta)
+          deltaFracs += matched.count().toDouble / math.max(1L, totalWords)
+        val delta = lvl1Of(matched.withColumn("n", -col("n")))
+          .unionByName(lvl1Of(rewrite(matched)))
+        lvl1 = lvl1.unionByName(delta)
+          .groupBy("x", "y", "side", "ctx").agg(sum("cn").as("cn"))
+          .where(col("cn") =!= 0L)
+          .localCheckpoint()
         wf = rewrite(wf)
         uncut += batch.size
         if (uncut >= 48) { wf = wf.localCheckpoint(); uncut = 0 }

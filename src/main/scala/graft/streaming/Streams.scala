@@ -52,10 +52,11 @@ object Streams {
                      sum_value: Double)
 
   /** Epoch-µs of a Timestamp. `getTime` alone TRUNCATES to milliseconds —
-    * the r10 StreamEq run caught exactly that: at sf1's µs-grain event
-    * times, ms arithmetic silently disagreed with the batch twins' exact
-    * `unix_micros` ordering and gap tests. Same integer-µs discipline as
-    * [[graft.operators.Events]]. */
+    * the r10 stream ≡ batch run caught exactly that (`STREAMEQ_r10.json`;
+    * its harness, the retired `StreamEq` main, is at commit `795cadb`): at
+    * sf1's µs-grain event times, ms arithmetic silently disagreed with the
+    * batch twins' exact `unix_micros` ordering and gap tests. Same
+    * integer-µs discipline as [[graft.operators.Events]]. */
   private[graft] def tsUs(t: java.sql.Timestamp): Long =
     Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
   private[graft] def usTs(us: Long): java.sql.Timestamp = {
@@ -83,7 +84,10 @@ object Streams {
     * watermark passes its end + gap. The streaming dual of the batch
     * gaps-and-islands in `Events.sessions` — µs-exact gap/order
     * arithmetic and decimal-exact sums, so the two faces agree
-    * row-for-row (STREAMEQ artifact), not just approximately.
+    * row-for-row, not just approximately: StreamingSpec's "stateful
+    * sessionization" and "batch sessionization agrees" cases pin it, and
+    * `STREAMEQ_r11.json` / `STREAMEQ_r12_sf10_stateful.json` record it at
+    * sf1/sf10.
     * Contract: events are folded on arrival (state is one OPEN session,
     * not a buffer), so delivery must be in order per user beyond the
     * gap tolerance — the deployment shape for sessionization; full
@@ -238,7 +242,7 @@ object Streams {
           // buffered times in epoch-µs: the batch twin orders and reports
           // stage times by unix_micros, and ms truncation loses sub-ms
           // order AND emits truncated stage timestamps (caught by the r10
-          // StreamEq run at sf1)
+          // stream ≡ batch run at sf1, STREAMEQ_r10.json)
           val buf = st0.buf ++ batch.map(e => (tsUs(e.ts), e.event_id, e.event_type))
           // finalize only what the watermark has sealed: nothing earlier
           // can still arrive, so sorted processing is total-order correct
@@ -365,7 +369,9 @@ object Streams {
     * micro-batch rewrites exactly its own partition. Unlike dedupIngest
     * there is no growing index: batches interact only with the fixed
     * bench side, so the streaming union over batches is row-identical
-    * to the one-shot batch report (the StreamEq decontam arm gates it). */
+    * to the one-shot batch report. StreamingSpec's "streaming decontam"
+    * case pins that equality; `STREAMEQ_r15_sf10_decontam.json` records
+    * it at sf10 (harness at commit `795cadb`). */
   def decontamIngest(train: DataFrame, bench: DataFrame, hitsPath: String,
                      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val wide = graft.plans.GraftExtensions.SignBandsWideName
@@ -408,11 +414,8 @@ object Streams {
     * `Tables.events` call. A stream needs a DECLARED schema, so the
     * ns-vs-µs encoding probe (see [[graft.sources.Tables.events]]) runs
     * as one batch footer read up front — the same metadata cost the
-    * source's own listing pays. `maxFilesPerTrigger` splits the table
-    * into that many-file micro-batches (0 = all at once) — the StreamEq
-    * harness uses it to force genuine multi-batch incremental state. */
-  def eventsFileStream(s: SparkSession, dir: String,
-                       maxFilesPerTrigger: Int = 0): DataFrame = {
+    * source's own listing pays. */
+  def eventsFileStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
     val tsType = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
@@ -432,8 +435,6 @@ object Streams {
     val isDir = eventsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       .getFileStatus(eventsPath).isDirectory
     if (!isDir) reader.option("pathGlobFilter", "events.parquet")
-    if (maxFilesPerTrigger > 0)
-      reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
     val raw = reader.parquet(if (isDir) eventsPath.toString else dir)
     tsType match {
       case TimestampType => raw

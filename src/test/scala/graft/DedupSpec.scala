@@ -334,6 +334,52 @@ class DedupSpec extends SparkSpec {
       "fixture must exercise the d=2 compositions it claims")
   }
 
+  test("fuzzy blocking-entropy law: exact keyed, candidate and verified counts per key") {
+    // The d=2 cost law of Dedup.fuzzyPairs' scaladoc, counted on the raw
+    // supplier table (FUZZYLAB_r14.json has the sf1 clique arm): blocking
+    // cost is bucket occupancy, set by the KEY's entropy. Per arm: keyed
+    // rows (explode output), DISTINCT candidate pairs before the
+    // levenshtein verify (what the shuffle carries), verified pairs.
+    //   d1_bare      depth-1 keys on s_name (the dedup_fuzzy blocking)
+    //   d2_bare      depth-2 keys on s_name: the quadratic trap
+    //   d2_composite depth-2 keys on s_name || '|' || cents (dedup_fuzzy2)
+    def law(dir: String): Map[String, (Long, Long, Long)] = {
+      val sup = graft.sources.Tables.supplier(spark, dir)
+      val bare = sup.select(col("s_suppkey").as("id"), col("s_name").as("name"))
+      val composite = sup.select(col("s_suppkey").as("id"),
+        concat(col("s_name"), lit("|"),
+          round(col("s_acctbal") * 100).cast("long").cast("string")).as("name"))
+      def arm(ents: org.apache.spark.sql.DataFrame, depth: Int): (Long, Long, Long) = {
+        val keys = if (depth == 1) Dedup.deletionKeys(col("name"))
+                   else Dedup.deletionKeys2(col("name"))
+        val keyed = ents.withColumn("k", explode(keys))
+        val cand = keyed.as("x").join(keyed.as("y"),
+            col("x.k") === col("y.k") && col("x.id") < col("y.id"))
+          .select(col("x.id").as("a"), col("x.name").as("an"),
+            col("y.id").as("b"), col("y.name").as("bn"))
+          .distinct()
+        val r = cand.agg(count(lit(1)),
+          count(when(levenshtein(col("an"), col("bn")) <= depth, 1))).head()
+        (keyed.count(), r.getLong(0), r.getLong(1))
+      }
+      Map("d1_bare" -> arm(bare, 1), "d2_bare" -> arm(bare, 2),
+        "d2_composite" -> arm(composite, 2))
+    }
+    val root = new java.io.File(sf).getParent
+    val got01 = law(s"$root/sf0.01")
+    assert(got01 == Map(
+      "d1_bare" -> ((1180L, 1665L, 900L)),
+      "d2_bare" -> ((6681L, 4950L, 4950L)), // all C(100, 2) pairs, every one verified
+      "d2_composite" -> ((15969L, 0L, 0L))), s"sf0.01: $got01")
+    // 10x the suppliers: bare d2 candidates grow ~quadratically, the
+    // composite key's stay at the true near-duplicates
+    val got1 = law(s"$root/sf0.1")
+    assert(got1 == Map(
+      "d1_bare" -> ((12700L, 36855L, 13500L)),
+      "d2_bare" -> ((77430L, 303255L, 142245L)),
+      "d2_composite" -> ((176002L, 10L, 2L))), s"sf0.1: $got1")
+  }
+
   test("fuzzy2: every planted two-edit twin is recovered at driver sf") {
     val matched = graft.SparkEntry.queries("dedup_fuzzy2")(spark, sf)
     val total = matched.select("n_matched_total").head().getLong(0)

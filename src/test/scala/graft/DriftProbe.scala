@@ -43,12 +43,14 @@ object DriftProbe {
     try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
       .write.mode("overwrite").format("noop").save()
     catch { case _: Throwable => () }
+    org.apache.spark.graftbridge.StorageBridge.awaitListeners(spark.sparkContext)
     stages.clear()
     val df = SparkEntry.queries(name)(spark, dir)
     val t0 = System.nanoTime()
     df.write.mode("overwrite").format("noop").save()
     val wall = (System.nanoTime() - t0) / 1e9
-    Thread.sleep(500)
+    // the listener bus is async: drain it before printing the stage table
+    org.apache.spark.graftbridge.StorageBridge.awaitListeners(spark.sparkContext)
     println(f"[drift] $name wall=$wall%.2fs")
     stages.sortBy(_._1).foreach { case (id, run, cpu, gc, n) =>
       println(f"[drift] stage $id%3d tasks=$n%3d runTime=${run / 1000.0}%8.2fs cpu=${cpu / 1000.0}%8.2fs gc=${gc / 1000.0}%6.2fs")

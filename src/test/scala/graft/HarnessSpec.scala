@@ -13,8 +13,9 @@ import scala.jdk.CollectionConverters._
   * executors turned out to be `-Xmx1024M` and died on the four
   * heaviest queries. This spec keeps the parser honest so no future
   * harness main re-introduces the silent 8× under-provisioning. It also
-  * pins the correctness dump's JSON and the declared-query list it is
-  * derived from — none of these cases needs a Spark session. */
+  * pins the correctness dump's JSON, the declared-query list it is
+  * derived from and the env-knob inventory — none of these cases needs
+  * a Spark session. */
 class HarnessSpec extends AnyFunSuite {
   test("local-cluster masters derive spark.executor.memory from the bracket") {
     assert(ExecutorDrain.executorMemoryFor("local-cluster[4,8,8192]")
@@ -104,6 +105,29 @@ class HarnessSpec extends AnyFunSuite {
     val unlisted = SparkEntry.queries.keySet -- listed
     assert(undeclared.isEmpty && unlisted.isEmpty,
       s"undeclared: ${undeclared.toSeq.sorted}; unlisted: ${unlisted.toSeq.sorted}")
+  }
+
+  test("the SPARK_GRAFT_* env knobs named under src/main are exactly these 30") {
+    // a knob added or retired must move this list on purpose
+    val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
+    val src = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val named = try src.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => knob.findAllIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
+      .toSet
+    finally src.close()
+    val pinned = Set(
+      "ANNLAB_NPROBE", "ANNLAB_OUT", "ANNLAB_PROBES", "AQE", "ARTIFACTS",
+      "BCAST_MB", "BENCH_ONLY", "BENCH_OUT", "BENCH_REPS", "BPELAB_OUT",
+      "CANARYLAB_OUT", "CANARYLAB_RUNS", "CHECKPOINT_DIR", "CPUS",
+      "EXECUTOR_CLASSPATH", "EXECUTOR_MEM", "FAULTLAB_OUT", "LAB_CLASSPATH",
+      "LOG_LEVEL", "MASTER", "MEDIALAB_KS", "MEDIALAB_OUT",
+      "PUBLISHLAB_ITERS", "PUBLISHLAB_OUT", "SF_DIR", "SHUFFLELAB_OUT",
+      "SHUFFLELAB_QUERIES", "STREAMFAULTLAB_OUT", "STREAMRESTART_OUT",
+      "VERIFY_NATURAL").map("SPARK_GRAFT_" + _)
+    assert(pinned.size == 30)
+    assert(named == pinned,
+      s"new: ${(named -- pinned).toSeq.sorted}; gone: ${(pinned -- named).toSeq.sorted}")
   }
 
   test("value waivers name declared queries only: the one designed HLL waiver") {

@@ -217,6 +217,33 @@ class PlanAuditSpec extends SparkSpec {
         s"expected $expectedCells of $layoutCells cell partitions")
   }
 
+  test("awaitListeners: a slow listener has seen every task-end when it returns") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val sc = spark.sparkContext
+    val group = "await_listeners_spec"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    // counts only this case's tasks (job group), each one 100 ms late
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          j.stageIds.foreach(stages.add)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId)) { Thread.sleep(100); seen.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    val n = 8
+    try {
+      sc.setJobGroup(group, "awaitListeners spec")
+      assert(sc.parallelize(1 to n, n).count() == n)
+      org.apache.spark.graftbridge.StorageBridge.awaitListeners(sc)
+      assert(seen.get() == n, s"saw ${seen.get()} of $n task-ends after the wait")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("layout_bloom_smj injects might_contain and prunes the fact shuffle") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     // Shuffle-record truth from task metrics: the child regime session
@@ -229,20 +256,13 @@ class PlanAuditSpec extends SparkSpec {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    def quiesce(): Unit = { // listener bus is async; settle before reading
-      var prev = -1L; var same = 0
-      while (same < 2) {
-        Thread.sleep(200)
-        val now = records.get()
-        if (now == prev) same += 1 else { same = 0; prev = now }
-      }
-    }
     try {
       def measure(on: Boolean): (Long, String) = {
         records.set(0)
         val df = sources.BloomJoin.qBloomStar(spark, sf, bloomOn = on)
         df.collect()
-        quiesce()
+        // listener bus is async; drain before reading
+        org.apache.spark.graftbridge.StorageBridge.awaitListeners(spark.sparkContext)
         val plan = (df.queryExecution.executedPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan
           case p => p

@@ -8,8 +8,9 @@ import org.apache.spark.sql.streaming.OutputMode
 import java.sql.Timestamp
 
 /** Structured Streaming semantics: stream ≡ batch for the shared windowed
-  * transform, and stateful sessionization emits exactly the closed
-  * sessions the batch gaps-and-islands would. */
+  * transform, the CDC apply and the semantic decontam, and stateful
+  * sessionization emits exactly the closed sessions the batch
+  * gaps-and-islands would. */
 class StreamingSpec extends SparkSpec {
   private lazy val sp = spark
   import sp.implicits._
@@ -35,6 +36,33 @@ class StreamingSpec extends SparkSpec {
           .select("event_id", "ts", "user_id", "event_type", "value"))
         .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
       assert(got == want, s"stream produced ${got.size} windows, batch ${want.size}")
+    } finally q.stop()
+  }
+
+  test("streaming CDC apply (complete mode, batches out of event-time order) == batch cdcApply") {
+    val events = graft.sources.Tables.events(spark, sf)
+      .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
+      .collect().toSeq.sortBy(e => (Streams.tsUs(e.ts), e.event_id))
+    // the later half arrives first: last-write-wins must follow event
+    // time, not arrival, so a user with events in both halves takes the
+    // latest (ts, event_id) from the batch that arrived FIRST
+    val (early, late) = events.splitAt(events.size / 2)
+    val spanning = early.map(_.user_id).toSet.intersect(late.map(_.user_id).toSet)
+    assert(spanning.nonEmpty, "no user spans both batches: arrival order would be untested")
+    val stream = MemoryStream[Event](spark)
+    val q = Events.cdcApply(stream.toDF())
+      .writeStream.format("memory").queryName("cdc_complete")
+      .outputMode(OutputMode.Complete).start()
+    try {
+      stream.addData(late)
+      q.processAllAvailable()
+      stream.addData(early)
+      q.processAllAvailable()
+      val got = spark.table("cdc_complete").collect().toSet
+      val want = Events.cdcApply(graft.sources.Tables.events(spark, sf)).collect().toSet
+      assert(want.nonEmpty && want.exists(_.getAs[Long]("n_deletes") > 0),
+        "the fixture must carry live users and tombstones")
+      assert(got == want, s"stream-only ${(got -- want).take(5)}; batch-only ${(want -- got).take(5)}")
     } finally q.stop()
   }
 
@@ -249,6 +277,34 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming decontam: two train micro-batches == the one-shot embedReport") {
+    import graft.operators.Decontam
+    import org.apache.spark.sql.functions.col
+    val tmp = java.nio.file.Files.createTempDirectory("graft_decontam").toString
+    val (bench, trainDf) = Decontam.plantedSides(spark, sf)
+    val train = trainDf.as[StreamingSpec.TrainVec].collect().toSeq
+    val stream = MemoryStream[StreamingSpec.TrainVec](spark)
+    val q = Streams.decontamIngest(stream.toDF(), bench, s"$tmp/hits", s"$tmp/ckpt")
+    try {
+      // split on vec_id parity: a hit depends on its train row and the
+      // static bench side only, so any split must reproduce the batch
+      // rows, and the planted replicas land in both batches
+      Seq(0L, 1L).foreach { p =>
+        stream.addData(train.filter(v => Math.floorMod(v.vec_id, 2L) == p))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    val hits = spark.read.parquet(s"$tmp/hits")
+    val perBatch = hits.groupBy(col("batch_id").cast("long")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(perBatch.keySet == Set(0L, 1L) && perBatch.values.forall(_ > 0),
+      s"each micro-batch must carry hits: $perBatch")
+    def triples(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+      df.select("train_id", "bench_id", "cosine").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    assert(triples(hits) == triples(Decontam.embedReport(spark, sf)))
+  }
+
   test("streaming funnel: exact under out-of-order delivery, watermark-gated emission") {
     val stream = MemoryStream[Event](spark)
     val q = Streams.funnelStages(stream.toDS())
@@ -293,4 +349,9 @@ class StreamingSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     assert(new java.io.File(s"$tmp/ckpt").exists, "checkpoint dir created")
   }
+}
+
+object StreamingSpec {
+  /** One prepared train vector, as `Similarity.prepared` emits it. */
+  case class TrainVec(vec_id: Long, ie: Seq[Long], nrm: Double)
 }
