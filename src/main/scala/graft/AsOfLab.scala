@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.graftbridge.StorageBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
@@ -30,7 +29,8 @@ import graft.sources.Tables
   *              attributes exactly the merge + output-projection work.
   *
   * Wall seconds are reported too (min over reps) but the share is
-  * computed from summed task time. Run:
+  * computed from summed task time: each rep's executor run time, which
+  * the status store totals per job group (`task_sec`). Run:
   *   SPARK_GRAFT_SF_DIR=testdata-sf10 SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.AsOfLab"
   *
@@ -65,11 +65,6 @@ object AsOfLab {
       // is measuring the merge with scan-provided order, no Sort node
       "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true"))
 
-    val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        taskMs.addAndGet(t.taskInfo.duration)
-    })
     /** Consume every row of the frame's physical plan; returns row count.
       * Draining `executedPlan.execute()` directly keeps the exchanges and
       * sorts in the measured plan — a `count()` would prune them away. */
@@ -80,18 +75,18 @@ object AsOfLab {
         }.collect().sum
 
     final case class Arm(wall: Double, taskSec: Double, rows: Long)
-    def time(mk: () => DataFrame): Arm = {
-      var best: Arm = null
-      (1 to reps).foreach { _ =>
-        taskMs.set(0)
-        val t0 = System.nanoTime()
-        val rows = drain(mk())
-        val wall = (System.nanoTime() - t0) / 1e9
-        StorageBridge.awaitListeners(spark.sparkContext) // async bus
-        val ts = taskMs.get() / 1e3
-        if (best == null || wall < best.wall) best = Arm(wall, ts, rows)
-      }
-      best
+    /** Min-wall rep of one arm; each rep runs under its own job group,
+      * whose executor run time the status store sums. */
+    def time(arm: String, mk: () => DataFrame): Arm = {
+      val sc = spark.sparkContext
+      (1 to reps).map { rep =>
+        val ((rows, wall), t) = StorageBridge.inGroup(sc, s"asoflab_${arm}_$rep") {
+          val t0 = System.nanoTime()
+          val rows = drain(mk())
+          (rows, (System.nanoTime() - t0) / 1e9)
+        }
+        Arm(wall, t.sum.runMs / 1e3, rows)
+      }.minBy(_.wall)
     }
 
     def purchases: DataFrame = Tables.events(spark, sfDir)
@@ -112,9 +107,9 @@ object AsOfLab {
     // warmup all three shapes (codegen/JIT outside the timed reps)
     drain(native); drain(skelL); drain(skelR)
 
-    val n = time(() => native)
-    val l = time(() => skelL)
-    val r = time(() => skelR)
+    val n = time("native", () => native)
+    val l = time("skeleton_left", () => skelL)
+    val r = time("skeleton_right", () => skelR)
     require(n.rows == l.rows,
       s"left-outer as-of must preserve left cardinality: ${n.rows} vs ${l.rows}")
     val share = (n.taskSec - l.taskSec - r.taskSec) / n.taskSec
@@ -148,9 +143,9 @@ object AsOfLab {
         planB.take(2000))
 
     drain(nativeB); drain(scanL); drain(scanR)
-    val nb = time(() => nativeB)
-    val lb = time(() => scanL)
-    val rb = time(() => scanR)
+    val nb = time("bucketed_native", () => nativeB)
+    val lb = time("scan_left", () => scanL)
+    val rb = time("scan_right", () => scanR)
     require(nb.rows == n.rows,
       s"bucketed native must produce identical cardinality: ${nb.rows} vs ${n.rows}")
     val shareB = (nb.taskSec - lb.taskSec - rb.taskSec) / nb.taskSec

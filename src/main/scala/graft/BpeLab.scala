@@ -78,33 +78,24 @@ object BpeLab {
 
     // Spark-job counter: the honest scheduling-cost unit for the
     // jobs-per-merge claims below (includes checkpoints and collects,
-    // not just the stats passes). The listener bus is async — drain it
-    // before each read.
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    })
-    def countingJobs[T](f: => T): (T, Int) = {
-      StorageBridge.awaitListeners(spark.sparkContext)
-      val before = jobCount.get()
-      val r = f
-      StorageBridge.awaitListeners(spark.sparkContext)
-      (r, jobCount.get() - before)
+    // not just the stats passes). Each train runs under its own job
+    // group, whose jobs the status store counts.
+    val sc = spark.sparkContext
+    def countingJobs[T](group: String)(f: => T): (T, Int) = {
+      val (r, g) = StorageBridge.inGroup(sc, group)(f)
+      (r, g.jobs)
     }
 
     // training batch rates, distributed regime forced on both shapes —
     // now under the r17 incremental level-1 maintenance, with each
     // pass's delta fraction (matched words / vocab) recorded
     val entityBounded = Text.bpeEntityCorpus(spark, sfDir)
-    val ((entStats, entJobs), entSec) = timed(countingJobs(
+    val ((entStats, entJobs), entSec) = timed(countingJobs("bpelab_entity")(
       Text.bpeTrainBatchedStats(entityBounded, 64, driverVocabLimit = 0,
         measureDelta = true)))
     val docs = graft.sources.Tables.documents(spark, sfDir)
       .select(graft.functions.Hashes.normText(col("text")).as("t"))
-    val ((docStats, docJobs), docSec) = timed(countingJobs(
+    val ((docStats, docJobs), docSec) = timed(countingJobs("bpelab_documents")(
       Text.bpeTrainBatchedStats(docs, 64, driverVocabLimit = 0,
         measureDelta = true)))
 
@@ -118,7 +109,7 @@ object BpeLab {
       .where(length(col("w")) > 0).groupBy("w").agg(count(lit(1)).as("n"))
     val vocabAll = wfAll.count()
     val vocabFloored = wfAll.where(col("n") >= 2).count()
-    val ((floorStats, floorJobs), floorSec) = timed(countingJobs(
+    val ((floorStats, floorJobs), floorSec) = timed(countingJobs("bpelab_floor")(
       Text.bpeTrainBatchedStats(corpus, 512, minFreq = 2)))
 
     def fr(d: Seq[Double]): String =

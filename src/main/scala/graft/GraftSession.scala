@@ -83,4 +83,21 @@ object GraftSession {
       env.getOrElse("SPARK_GRAFT_LOG_LEVEL", logLevel))
     spark
   }
+
+  /** Start `mainClass args` in a child driver JVM, for labs whose
+    * failure domain is a whole process: this JVM's classpath, the module
+    * opens Spark needs on JDK 17 (as spark-submit injects them), and
+    * stdout and stderr both to `log`. The child builds its own session. */
+  def launchChild(mainClass: String, args: Seq[String], heap: String,
+                  log: java.io.File): Process = {
+    val opens = org.apache.spark.launcher.JavaModuleOptions
+      .defaultModuleOptions().split("\\s+").filter(_.nonEmpty)
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java") ++ opens ++
+      Seq(s"-Xmx$heap", "-cp", System.getProperty("java.class.path"), mainClass) ++
+      args
+    new ProcessBuilder(cmd: _*)
+      .redirectErrorStream(true)
+      .redirectOutput(log)
+      .start()
+  }
 }

@@ -40,26 +40,6 @@ object MediaLab {
       .split(",").map(_.trim.toInt).toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
 
-    // Task-time accounting per arm: wall alone cannot distinguish "the
-    // operator doesn't parallelize" from "the single shared JVM is the
-    // ceiling". runTime >> cpuTime at high k = tasks BLOCKED (locks/GC
-    // stalls); cpuTime growing with k = the work itself amplifying
-    // (allocator/GC overhead attributed to task CPU).
-    val runMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = t.taskMetrics
-          if (m != null) {
-            runMs.addAndGet(m.executorRunTime)
-            cpuNs.addAndGet(m.executorCpuTime)
-            gcMs.addAndGet(m.jvmGCTime)
-          }
-        }
-      })
 
     val tmp = java.nio.file.Files.createTempDirectory("graft_medialab").toString
     def rm(p: java.io.File): Unit = {
@@ -88,6 +68,13 @@ object MediaLab {
 
       // ---- decode wall vs partition count ------------------------------
       import spark.implicits._
+      // Task-time accounting per arm: wall alone cannot distinguish "the
+      // operator doesn't parallelize" from "the single shared JVM is the
+      // ceiling". runTime >> cpuTime at high k = tasks BLOCKED (locks/GC
+      // stalls); cpuTime growing with k = the work itself amplifying
+      // (allocator/GC overhead attributed to task CPU). The measured reps
+      // of each arm run under one job group; the status store sums them.
+      val sc = spark.sparkContext
       def decodeArm(k: Int, shuffle: Boolean = false)
           : (Double, String, Long, Long, Long) = {
         def once(): (Double, String) = {
@@ -108,14 +95,13 @@ object MediaLab {
           (wall, row.getDecimal(0).toString)
         }
         once() // per-arm warm rep: plan codegen out of the measured reps
-        StorageBridge.awaitListeners(spark.sparkContext) // async bus
-        runMs.set(0); cpuNs.set(0); gcMs.set(0)
-        val runs = (1 to reps).map(_ => once())
-        StorageBridge.awaitListeners(spark.sparkContext)
+        val (runs, g) = StorageBridge.inGroup(sc,
+          s"medialab_${if (shuffle) "shuffle" else "narrow"}_k$k")((1 to reps).map(_ => once()))
+        val t = g.sum
         require(runs.map(_._2).distinct.size == 1,
           s"fingerprint drifted across reps at k=$k")
         (runs.map(_._1).min, runs.head._2,
-          runMs.get() / reps, cpuNs.get() / reps / 1000000L, gcMs.get() / reps)
+          t.runMs / reps, t.cpuNs / reps / 1000000L, t.gcMs / reps)
       }
       val cores = spark.sparkContext.defaultParallelism
       val arms = ks.map { k => k -> decodeArm(k) }

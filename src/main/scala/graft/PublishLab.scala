@@ -47,28 +47,10 @@ object PublishLab {
     val iters = sys.env.getOrElse("SPARK_GRAFT_PUBLISHLAB_ITERS", "12").toInt
     val root = java.nio.file.Files.createTempDirectory("graft_publishlab").toString
 
-    // child JVMs: same classpath as this (forked) main, same JDK-17
-    // module opens build.sbt injects
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val javaBin = System.getProperty("java.home") + "/bin/java"
     def spawn(writer: String): (Process, java.io.File) = {
       val log = java.nio.file.Files.createTempFile(s"publishlab_$writer", ".log").toFile
-      val cmd: Seq[String] = Seq(javaBin) ++ addOpens ++ Seq(
-        "-Xmx2g", "-Dspark.ui.enabled=false",
-        "-cp", System.getProperty("java.class.path"),
-        "graft.PublishLab", "worker", root, writer, iters.toString)
-      val pb = new ProcessBuilder(cmd: _*)
-      pb.redirectErrorStream(true)
-      pb.redirectOutput(log)
-      (pb.start(), log)
+      (GraftSession.launchChild("graft.PublishLab",
+        Seq("worker", root, writer, iters.toString), "2g", log), log)
     }
 
     // the parent's own session doubles as the concurrent READER

@@ -1,14 +1,12 @@
 package graft
 
 import org.apache.spark.graftbridge.StorageBridge
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle-byte scaling audit: run a representative set of declared
   * queries at one sf and record, per query, the TOTAL shuffle bytes
-  * written/read and input bytes scanned (task-metric truth, summed by a
-  * `SparkListener`, not plan-shape inference). Run at sf1 and sf10 and
+  * written/read and input bytes scanned (task-metric truth, summed per
+  * job group by Spark's status store, not plan-shape inference). Run at
+  * sf1 and sf10 and
   * the ratio answers the question wall-clock alone can't: does the
   * NETWORK cost — the thing that actually saturates first on a
   * 1000-executor cluster — grow linearly with the data, or is a
@@ -28,8 +26,9 @@ import org.apache.spark.sql.SparkSession
   *   - One fresh JVM per sf (the shell wrapper runs the lab twice): the
   *     sf10 dedup family spills tens of GB; sharing a JVM across sfs
   *     would let storage pressure bleed between measurements.
-  *   - Listener totals are read only after they go quiet (the listener
-  *     bus is async; a fixed sleep would race slow-draining queues).
+  *   - Each query runs under its own job group; its totals are read
+  *     after the listener bus drains (the bus is async; a fixed sleep
+  *     would race slow-draining queues).
   *   - Queries run through the same noop-sink action as Bench, warmed at
   *     sf0.001 so codegen/JIT compilation is not billed as scan work.
   *
@@ -63,23 +62,7 @@ object ShuffleLab {
     val spark = GraftSession.build(extra = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> s"${bcastMb}MB"))
 
-    val shufWrite = new AtomicLong(0)
-    val shufRead = new AtomicLong(0)
-    val shufRecords = new AtomicLong(0)
-    val inputBytes = new AtomicLong(0)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          inputBytes.addAndGet(m.inputMetrics.bytesRead)
-        }
-      }
-    })
-    def resetCounters(): Unit =
-      Seq(shufWrite, shufRead, shufRecords, inputBytes).foreach(_.set(0))
+    val sc = spark.sparkContext
     def sweep(): Unit = {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
@@ -97,17 +80,18 @@ object ShuffleLab {
 
     val results = scala.collection.mutable.LinkedHashMap[String, String]()
     queries.foreach { name =>
-      resetCounters()
-      val t0 = System.nanoTime()
-      builds(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      StorageBridge.awaitListeners(spark.sparkContext) // async bus
+      val (wall, g) = StorageBridge.inGroup(sc, s"shufflelab_$name") {
+        val t0 = System.nanoTime()
+        builds(name)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save()
+        (System.nanoTime() - t0) / 1e9
+      }
+      val t = g.sum
       results(name) =
-        f"""{"wall_sec":$wall%.2f,"shuffle_write_bytes":${shufWrite.get()},"shuffle_read_bytes":${shufRead.get()},"shuffle_records":${shufRecords.get()},"input_bytes":${inputBytes.get()}}"""
+        f"""{"wall_sec":$wall%.2f,"shuffle_write_bytes":${t.shuffleWriteBytes},"shuffle_read_bytes":${t.shuffleReadBytes},"shuffle_records":${t.shuffleWriteRecords},"input_bytes":${t.inputBytes}}"""
       println(f"[shufflelab] $name: wall=$wall%.2fs " +
-        f"write=${shufWrite.get() / 1048576.0}%.1fMB read=${shufRead.get() / 1048576.0}%.1fMB " +
-        f"input=${inputBytes.get() / 1048576.0}%.1fMB")
+        f"write=${t.shuffleWriteBytes / 1048576.0}%.1fMB read=${t.shuffleReadBytes / 1048576.0}%.1fMB " +
+        f"input=${t.inputBytes / 1048576.0}%.1fMB")
       sweep()
     }
 

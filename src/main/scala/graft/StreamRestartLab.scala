@@ -5,7 +5,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import scala.jdk.CollectionConverters._
 
 /** Streaming crash-recovery proof: SIGKILL an ENTIRE checkpointed
   * streaming driver JVM mid-run, restart it from the same checkpoint, and
@@ -133,19 +132,9 @@ object StreamRestartLab {
     println(s"[streamrestart] staged $nFiles chunk files (${ordered.length} events + 2 sentinels)")
 
     // ---- child process plumbing ---------------------------------------
-    val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val opens = org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()
-      .split("\\s+").filter(_.nonEmpty)
-    val cp = sys.env.getOrElse("SPARK_GRAFT_LAB_CLASSPATH",
-      "/opt/spark/jars/*:/root/repo/target/scala-2.13/classes")
-    def launch(tag: String, ckpt: String, out: String, marker: String): Process = {
-      val cmd = (Seq(javaBin) ++ opens ++ Seq("-Xmx6g", "-cp", cp,
-        "graft.StreamRestartLab", "child", staging, ckpt, out, marker)).asJava
-      new ProcessBuilder(cmd)
-        .redirectErrorStream(true)
-        .redirectOutput(new File(s"$tmp/child_$tag.log"))
-        .start()
-    }
+    def launch(tag: String, ckpt: String, out: String, marker: String): Process =
+      GraftSession.launchChild("graft.StreamRestartLab",
+        Seq("child", staging, ckpt, out, marker), "6g", new File(s"$tmp/child_$tag.log"))
     def commits(ckpt: String): Int = {
       val d = new File(s"$ckpt/commits")
       if (!d.isDirectory) 0

@@ -14,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * heaviest queries. This spec keeps the parser honest so no future
   * harness main re-introduces the silent 8× under-provisioning. It also
   * pins the correctness dump's JSON, the declared-query list it is
-  * derived from and the env-knob inventory — none of these cases needs
-  * a Spark session. */
+  * derived from, the env-knob inventory, the absence of hand-rolled
+  * listeners and FaultLab's kill filter — none of these cases needs a
+  * Spark session. */
 class HarnessSpec extends AnyFunSuite {
   test("local-cluster masters derive spark.executor.memory from the bracket") {
     assert(ExecutorDrain.executorMemoryFor("local-cluster[4,8,8192]")
@@ -107,7 +108,7 @@ class HarnessSpec extends AnyFunSuite {
       s"undeclared: ${undeclared.toSeq.sorted}; unlisted: ${unlisted.toSeq.sorted}")
   }
 
-  test("the SPARK_GRAFT_* env knobs named under src/main are exactly these 30") {
+  test("the SPARK_GRAFT_* env knobs named under src/main are exactly the pinned set") {
     // a knob added or retired must move this list on purpose
     val knob = "SPARK_GRAFT_[A-Z0-9_]+".r
     val src = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
@@ -120,14 +121,46 @@ class HarnessSpec extends AnyFunSuite {
       "ANNLAB_NPROBE", "ANNLAB_OUT", "ANNLAB_PROBES", "AQE", "ARTIFACTS",
       "BCAST_MB", "BENCH_ONLY", "BENCH_OUT", "BENCH_REPS", "BPELAB_OUT",
       "CANARYLAB_OUT", "CANARYLAB_RUNS", "CHECKPOINT_DIR", "CPUS",
-      "EXECUTOR_CLASSPATH", "EXECUTOR_MEM", "FAULTLAB_OUT", "LAB_CLASSPATH",
+      "EXECUTOR_CLASSPATH", "EXECUTOR_MEM", "FAULTLAB_OUT",
       "LOG_LEVEL", "MASTER", "MEDIALAB_KS", "MEDIALAB_OUT",
       "PUBLISHLAB_ITERS", "PUBLISHLAB_OUT", "SF_DIR", "SHUFFLELAB_OUT",
-      "SHUFFLELAB_QUERIES", "STREAMFAULTLAB_OUT", "STREAMRESTART_OUT",
+      "SHUFFLELAB_QUERIES", "STREAMRESTART_OUT",
       "VERIFY_NATURAL").map("SPARK_GRAFT_" + _)
-    assert(pinned.size == 30)
+    assert(pinned.size == 28)
     assert(named == pinned,
       s"new: ${(named -- pinned).toSeq.sorted}; gone: ${(pinned -- named).toSeq.sorted}")
+  }
+
+  test("no SparkListener is subclassed or added under src/main or in DriftProbe") {
+    // the labs read Spark's status store (StorageBridge.groupTotals)
+    val listener = raw"(extends|with|new)\s+([\w.]+\.)?SparkListener\b|addSparkListener".r
+    assert(listener.findFirstIn("new org.apache.spark.scheduler.SparkListener {").nonEmpty)
+    assert(listener.findFirstIn("sc.addSparkListener(l)").nonEmpty)
+    assert(listener.findFirstIn("import org.apache.spark.scheduler.SparkListenerTaskEnd").isEmpty)
+    val src = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val files = try src.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally src.close()
+    val hits = (java.nio.file.Paths.get("src/test/scala/graft/DriftProbe.scala") :: files)
+      .flatMap { p =>
+        listener.findAllIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+          .map(m => s"$p: $m")
+      }
+    assert(files.size > 50 && hits.isEmpty, hits.mkString("; "))
+  }
+
+  test("FaultLab kills only an executor of its own application") {
+    val app = "app-20261018231900-0000"
+    def executor(appId: String) = "java -cp classes -Xmx2g " +
+      "org.apache.spark.executor.CoarseGrainedExecutorBackend --driver-url " +
+      "spark://CoarseGrainedScheduler@10.0.0.1:40000 --executor-id 1 " +
+      s"--hostname 10.0.0.1 --cores 8 --app-id $appId " +
+      "--worker-url spark://Worker@10.0.0.1:40001 --resourceProfileId 0"
+    assert(FaultLab.isExecutorOf(app, executor(app)))
+    // another application's executor, including one whose id extends ours
+    assert(!FaultLab.isExecutorOf(app, executor("app-20261018231900-0001")))
+    assert(!FaultLab.isExecutorOf(app, executor(app + "1")))
+    // a process that only names the app id is not an executor
+    assert(!FaultLab.isExecutorOf(app, s"java graft.FaultLab --app-id $app"))
   }
 
   test("value waivers name declared queries only: the one designed HLL waiver") {

@@ -244,6 +244,81 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("groupTotals: a group's store totals equal a listener's per-task sums") {
+    import org.apache.spark.graftbridge.StorageBridge
+    import org.apache.spark.graftbridge.StorageBridge.TaskSums
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    import org.apache.spark.sql.functions.col
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobStages = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[Int])]()
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[(Int, TaskSums)]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobStages.add((Option(j.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull, j.stageIds)); ()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        val m = t.taskMetrics
+        ends.add(t.stageId -> TaskSums(1, m.executorRunTime, m.executorCpuTime,
+          m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead,
+          m.shuffleReadMetrics.recordsRead, m.shuffleWriteMetrics.bytesWritten,
+          m.shuffleWriteMetrics.recordsWritten, m.inputMetrics.bytesRead,
+          m.memoryBytesSpilled + m.diskBytesSpilled)); ()
+      }
+    }
+    val (a, b) = ("group_totals_spec_a", "group_totals_spec_b")
+    // a star join + aggregate (broadcast, exchanges, file scans), then one
+    // Dataset collected twice: the second run skips the first's map stage
+    val counts = spark.range(0, 20000, 1, 8).groupBy(col("id") % 7).count()
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(a, "groupTotals spec a")
+      SparkEntry.queries("kpi_by_dept")(spark, sf).collect()
+      counts.collect(); counts.collect()
+      sc.setJobGroup(b, "groupTotals spec b")
+      spark.range(0, 5000, 1, 3).groupBy(col("id") % 3).count().collect()
+    } finally {
+      sc.clearJobGroup()
+      // a removed listener misses the events still queued for it
+      StorageBridge.awaitListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    val ta = StorageBridge.groupTotals(sc, a)
+    val tb = StorageBridge.groupTotals(sc, b)
+    def expected(g: String): (Int, Seq[(Int, TaskSums)]) = {
+      val js = jobStages.asScala.toSeq.filter(_._1 == g)
+      val stages = js.flatMap(_._2).toSet
+      (js.size, ends.asScala.toSeq.filter(e => stages(e._1)).groupBy(_._1)
+        .map { case (s, ts) => s -> ts.map(_._2).foldLeft(TaskSums.Zero)(_ + _) }
+        .toSeq.sortBy(_._1))
+    }
+    val (jobsA, stagesA) = expected(a)
+    val (jobsB, stagesB) = expected(b)
+    assert(ta.jobs == jobsA && tb.jobs == jobsB)
+    assert(ta.byStage == stagesA)
+    assert(tb.byStage == stagesB)
+    assert(ta.sum.shuffleWriteBytes > 0 && ta.sum.inputBytes > 0 && ta.sum.cpuNs > 0)
+    // b's work is not in a's totals
+    assert(ta.byStage.map(_._1).toSet.intersect(tb.byStage.map(_._1).toSet).isEmpty)
+  }
+
+  test("groupTotals: a group the status store has partly evicted throws") {
+    import org.apache.spark.graftbridge.StorageBridge
+    val sc = spark.sparkContext
+    val group = "group_totals_spec_evicted"
+    // one job more than the store retains: at least one of them is gone
+    val n = sc.getConf.getInt("spark.ui.retainedJobs", 1000) + 1
+    try {
+      sc.setJobGroup(group, "groupTotals eviction spec")
+      (1 to n).foreach(_ => sc.parallelize(Seq(1), 1).count())
+    } finally sc.clearJobGroup()
+    StorageBridge.awaitListeners(sc)
+    assert(sc.statusTracker.getJobIdsForGroup(group).length < n)
+    val e = intercept[IllegalStateException](StorageBridge.groupTotals(sc, group))
+    assert(e.getMessage.contains(s"group $group was partly evicted"))
+  }
+
   test("layout_bloom_smj injects might_contain and prunes the fact shuffle") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
     // Shuffle-record truth from task metrics: the child regime session
