@@ -23,57 +23,9 @@ object Bench {
     // for dim-sized inputs (Etl.dimDept doc) — at WARN it floods the
     // bench JSON's tail.
     val spark = GraftSession.build(defaultCpus = "4")
-    val master = spark.sparkContext.master
 
     def run(df: DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
-
-    // Release leftover storage between queries: the iterative operators
-    // (connected components, Lloyd training, upsert sinks) use eager
-    // localCheckpoint, whose blocks have no public release API and so
-    // pile up in the BlockManager across a 46-query session. Round-3's
-    // bench measured dedup_simhash at 18.6 s mid-run vs 1.65 s isolated —
-    // pure storage-vs-execution memory contention, not plan cost. Every
-    // rep rebuilds its own checkpoints (fn is re-invoked), so sweeping
-    // after the action is safe.
-    def sweep(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // Single-JVM bench hygiene: ~100 sequential heavy queries fragment
-      // the old gen, and by late session queries measure GC, not plans —
-      // at sf10 the inflation reached 10× (59 s in-session vs 4.9 s
-      // isolated for text_langid). An explicit collection between
-      // queries runs OUTSIDE the timed window and keeps each query's
-      // min-of-reps measuring its own plan. But an UNCONDITIONAL
-      // System.gc() is a full collection that also unloads cold JIT'd
-      // codegen classes — measured as a uniform ~0.1-0.3 s re-JIT tax
-      // per query at sf0.1 (62 s → 76 s session total) where the heap
-      // was never pressured. Collect only when the heap is actually
-      // past half its ceiling: a no-op at small sf, the tail-rescuer at
-      // sf10. Multi-executor clusters don't share one old gen across a
-      // whole suite — this is harness fidelity, not an engine lever.
-      val rt = Runtime.getRuntime
-      val pressured = rt.totalMemory - rt.freeMemory > rt.maxMemory / 2
-      // Multi-process masters additionally need the driver GC to run the
-      // ContextCleaner — executor-side broadcast blocks are only dropped
-      // when the DRIVER collects their references, and executor memory
-      // pressure is invisible to the driver-heap condition above — and
-      // they need the cleanup to COMPLETE before the next rep starts:
-      // the cleaner is asynchronous, and racing it leaves dead
-      // HashedRelations pinning the storage pool (the r11 finding — the
-      // 4 heaviest queries died with FailedToGrowBytesToBytesMap at
-      // sf1/local-cluster[4,8,8192], green once the sweep waits; see
-      // ExecutorDrain). These conditions are INDEPENDENT: the drain must
-      // run on every multi-process sweep, driver heap pressured or not —
-      // the pressured iterations are exactly the ones with broadcast
-      // cleanup queued (awaitClean gc's itself, subsuming the pressure
-      // collection on that path). local[*] keeps the conditional policy:
-      // there the blocks share this JVM's heap, so the condition sees
-      // them, and the unconditional-gc re-JIT tax stays out of the
-      // recorded numbers.
-      if (!master.startsWith("local[")) ExecutorDrain.awaitClean(spark)
-      else if (pressured) System.gc()
-    }
 
     // Optional comma-separated name filter for local iteration on one
     // query's timing (full runs leave it unset — the driver's JSON must
@@ -111,7 +63,7 @@ object Bench {
     // Warmup: same plan shapes, tiny data — compiles codegen + JITs hot paths.
     selected.foreach { case (_, fn) =>
       try run(fn(spark, warmDir)) catch { case _: Throwable => () }
-      sweep()
+      ExecutorDrain.betweenQueries(spark)
     }
     // Warm the target-dir file index + footers too: listing and schema
     // reads are one-time session costs that would otherwise be billed to
@@ -160,7 +112,7 @@ object Bench {
         val t0 = System.nanoTime()
         try run(fn(spark, sfDir)) catch { case _: Throwable => errors += name }
         val dt = (System.nanoTime() - t0) / 1e9
-        sweep()
+        ExecutorDrain.betweenQueries(spark)
         dt
       }
       if (errors.contains(name)) None else Some(name -> times.min)

@@ -37,6 +37,51 @@ object ExecutorDrain {
     }
   }
 
+  /** True when the master's executors run in JVMs of their own
+    * (`local-cluster[…]`, standalone, YARN, Kubernetes); false for the
+    * single-JVM `local` and `local[…]` masters. */
+  def multiProcess(master: String): Boolean =
+    !(master == "local" || master.startsWith("local["))
+
+  /** The one cleanup `graft.Bench` and `graft.Verify` run between
+    * queries.
+    *
+    * Release leftover storage: the iterative operators (connected
+    * components, Lloyd training, upsert sinks) use eager
+    * localCheckpoint, whose blocks have no public release API and so
+    * pile up in the BlockManager across a 100-query session (round 3
+    * measured dedup_simhash at 18.6 s mid-run vs 1.65 s isolated — pure
+    * storage-vs-execution memory contention). Every caller rebuilds its
+    * frames per query, so sweeping after the action is safe.
+    *
+    * Multi-process masters then [[awaitClean]]: executor-side broadcast
+    * blocks are only dropped once the DRIVER's GC collects their
+    * references, executor memory pressure is invisible to the driver
+    * heap, and the asynchronous cleaner must FINISH before the next
+    * query starts (the r11 finding: the 4 heaviest queries died with
+    * FailedToGrowBytesToBytesMap at sf1/local-cluster[4,8,8192], green
+    * once the sweep waits). That drain runs whether or not the driver
+    * heap is pressured.
+    *
+    * Single-JVM masters skip it: the blocks share this JVM's heap, and
+    * there the drain only waits out its 2 s grace on a residual that
+    * never reaches zero (40–120 KB on ~120 of 129 queries, more than
+    * half of a full sf0.001 dump's wall). They collect only when the
+    * heap is past half its ceiling: ~100 sequential heavy queries
+    * fragment the old gen (sf10 measured 59 s in-session vs 4.9 s
+    * isolated for text_langid), but an UNCONDITIONAL full collection
+    * also unloads cold JIT'd codegen classes — a ~0.1–0.3 s re-JIT tax
+    * per query at sf0.1 (62 s → 76 s session total). */
+  def betweenQueries(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    if (multiProcess(spark.sparkContext.master)) awaitClean(spark)
+    else {
+      val rt = Runtime.getRuntime
+      if (rt.totalMemory - rt.freeMemory > rt.maxMemory / 2) System.gc()
+    }
+  }
+
   /** gc + poll cluster storage-used until the executors are actually
     * clean (zero bytes), bounded by `timeoutMs`. After the sweep's
     * clearCache + unpersist, ZERO is the legitimate steady state (the

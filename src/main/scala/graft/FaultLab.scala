@@ -80,10 +80,6 @@ object FaultLab {
         sys.env.getOrElse("SPARK_GRAFT_EXECUTOR_CLASSPATH", classes)))
     val sc = spark.sparkContext
     val tmp = java.nio.file.Files.createTempDirectory("graft_faultlab")
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete()
-    }
     try {
     sc.setCheckpointDir(s"$tmp/rdd_ckpt")
 
@@ -237,7 +233,7 @@ object FaultLab {
     java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes("UTF-8"))
     } finally {
-      rm(tmp.toFile)
+      org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
       spark.stop()
     }
   }

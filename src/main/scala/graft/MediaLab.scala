@@ -42,10 +42,6 @@ object MediaLab {
 
 
     val tmp = java.nio.file.Files.createTempDirectory("graft_medialab").toString
-    def rm(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles()).foreach(_.foreach(rm))
-      p.delete()
-    }
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
     }
@@ -126,7 +122,7 @@ object MediaLab {
       val outPath = sys.env.getOrElse("SPARK_GRAFT_MEDIALAB_OUT", "medialab.json")
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (json + "\n").getBytes("UTF-8"))
-    } finally rm(new java.io.File(tmp))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
     spark.stop()
   }
 }

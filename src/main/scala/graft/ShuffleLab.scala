@@ -45,7 +45,7 @@ object ShuffleLab {
     "dedup_exact", "dedup_minhash", "dedup_jaccard", "dedup_simhash",
     "dedup_fuzzy", "dedup_incremental", "dedup_embed_scaled", "dedup_clusters",
     "pipeline_curate", "pipeline_decontam", "text_heavy", "text_tfidf",
-    "events_sessions", "events_asof_native", "similar_topk",
+    "events_sessions", "events_asof", "similar_topk",
     "kpi_by_dept", "kpi_anomalies_at_scale")
 
   def main(args: Array[String]): Unit = {

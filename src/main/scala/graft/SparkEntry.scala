@@ -134,10 +134,6 @@ object SparkEntry {
     // Cluster formation over the verified near-dup pairs (connected
     // components via iterative min-label propagation)
     Query("dedup_clusters", (s, d) => Cluster.qClusters(s, d), Cluster.qClustersSql),
-    // The O(log n) large-star/small-star fallback FORCED as the component
-    // algorithm (the path deep graphs degrade to), so dedup_clusters'
-    // oracle: the star variant must produce identical components
-    Query("dedup_clusters_stars", (s, d) => Cluster.qClustersStars(s, d), Cluster.qClustersSql),
     // Deterministic stratified hash sampling (training-data mixing)
     Query("sample_stratified", (s, d) => Sample.qSample(s, d), Sample.qSampleSql),
     // End-to-end curation: exact dedup -> near-dup clusters -> quality
@@ -231,14 +227,11 @@ object SparkEntry {
     Query("events_window_sliding", (s, d) => Events.qSliding(s, d), Events.qSlidingSql),
     Query("events_sessions", (s, d) => Events.qSessions(s, d), Events.qSessionsSql),
     Query("events_props", (s, d) => Events.qProps(s, d), Events.qPropsSql),
-    // Temporal joins beyond built-ins: as-of (point-in-time, union+window
-    // formulation) and interval containment (bin-bucketed equi-join), plus
-    // a value-range rolling window frame
+    // Temporal joins beyond built-ins: as-of (point-in-time, through the
+    // NATIVE custom operator AsOfJoinNode/Strategy/Exec) and interval
+    // containment (bin-bucketed equi-join), plus a value-range rolling
+    // window frame
     Query("events_asof", (s, d) => TimeJoin.qAsof(s, d), TimeJoin.qAsofSql),
-    // The same as-of semantics through the NATIVE custom operator
-    // (AsOfJoinNode/Strategy/Exec via SparkSessionExtensions), so
-    // events_asof's oracle — one oracle, two implementations
-    Query("events_asof_native", (s, d) => TimeJoin.qAsofNative(s, d), TimeJoin.qAsofSql),
     // Composite-key (user_id, day) + inner variants of the native as-of
     // operator — multi-column equi-key merge, and unmatched-left drop
     Query("events_asof_multi", (s, d) => TimeJoin.qAsofMulti(s, d), TimeJoin.qAsofMultiSql),

@@ -54,23 +54,7 @@ object Verify {
         "ok"
       } catch { case e: Throwable => s"FAILED: ${e.getMessage}" }
       println(f"VERIFY $name ${(System.nanoTime() - t0) / 1e9}%.2fs $status")
-      // Release eager localCheckpoint blocks (iterative operators) so 46
-      // sequential queries don't accumulate pinned storage — see Bench.
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // Drive ContextCleaner between queries AND wait for it to finish:
-      // broadcast blocks (incl. every finished join's HashedRelation) are
-      // freed on EXECUTORS only after the DRIVER's GC collects their
-      // references, and the cleaner ships the removals asynchronously.
-      // Under a multi-process master the driver never feels executor
-      // memory pressure, so a 108-query application accumulates dead
-      // broadcast storage until an executor's execution pool starves —
-      // observed at sf1 under local-cluster[4,8,8192] as
-      // FailedToGrowBytesToBytesMap inside UnsafeHashedRelation.read
-      // (r11 finding, A/B-verified: same run is green with the drained
-      // sweep). Verify is not a timing harness, so the per-query cost is
-      // irrelevant here; Bench keeps its measured conditional policy.
-      ExecutorDrain.awaitClean(spark)
+      ExecutorDrain.betweenQueries(spark)
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(SparkEntry.oracleSql))
     // Designed value waivers, dumped beside the oracle so every gate

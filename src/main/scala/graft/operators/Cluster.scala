@@ -225,27 +225,6 @@ object Cluster {
       .orderBy("doc_id")
   }
 
-  /** [[qClusters]] with the O(log n)-round large-star/small-star variant
-    * FORCED as the component algorithm — the fallback path
-    * [[connectedComponents]] degrades to on adversarially deep graphs.
-    * Gate rationale (VERDICT r15 #6): the star variant was spec- and
-    * lab-proven (CCLAB_r12: 10⁷-node chain in 24 rounds) but no declared
-    * query exercised it — gate-sf graphs converge via propagation, so
-    * the fallback never fired on the driver surface. Same verified-pair
-    * input, same output contract, same oracle as `dedup_clusters`:
-    * component identity is algorithm-independent, so hash-equality
-    * against the unchanged recursive-CTE oracle is exactly the claim
-    * "the fallback is safe to degrade to". */
-  def qClustersStars(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.jaccardOverCandidates(Tables.documents(s, dir))
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val cc = connectedComponentsStars(pairs)
-    val csize = cc.groupBy("canonical_id").agg(count(lit(1)).as("n_members"))
-    cc.join(csize, "canonical_id")
-      .select("doc_id", "canonical_id", "n_members")
-      .orderBy("doc_id")
-  }
-
   /** Shared CTE chain (verified pairs -> `cc(doc_id, canonical_id)`),
     * reused by the curation-pipeline oracle. Must run under
     * `WITH RECURSIVE`. */

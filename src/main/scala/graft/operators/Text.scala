@@ -789,15 +789,15 @@ object Text {
   // VERDICT r14 #4): training-data pipelines budget shards and mixtures
   // by SUBWORD tokens, not whitespace words. Two halves:
   //
-  //   [[bpeTrain]] — deterministic greedy merge training. The only
+  //   TRAIN — [[bpeTrainBatched]] (the vocab-scale section below) is
+  //   the one trainer: deterministic greedy merge training. The only
   //   corpus-wide pass is the distinct-word frequency groupBy (classic
   //   BPE trains on the word-frequency table — VOCAB-sized, sublinear
-  //   in corpus; at 100 TB the iterations touch megabytes). Each
-  //   iteration is one vocab-sized shuffle + a 1-row argmax collect,
-  //   ties broken (count desc, pair lexicographic asc) so every engine
-  //   trains the identical list.
+  //   in corpus; at 100 TB the iterations touch megabytes), ties broken
+  //   (count desc, pair lexicographic asc) so every engine trains the
+  //   identical list.
   //
-  //   [[bpeTokens]] — apply, as a PURE codegen'd expression chain: each
+  //   APPLY — [[bpeTokens]], a PURE codegen'd expression chain: each
   //   char is wrapped as <d1>c<d2> and each merge (x,y) is one
   //   literal `replace` of <d1>x<d2><d1>y<d2> with
   //   <d1>xy<d2>. String replace's leftmost-non-overlap scan IS
@@ -836,64 +836,27 @@ object Text {
       (length(t) - length(replace(t, lit(" "), lit(""))))).cast("long")
   }
 
-  /** Deterministic greedy BPE training over the corpus' word-frequency
-    * table. Returns the ordered merges list; stops early when no
-    * adjacent pair remains (fully merged vocab). */
-  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[(String, String)] = {
-    var wf = docs.select(explode(words(col("text"))).as("w"))
-      .where(length(col("w")) > 0)
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(regexp_replace(col("w"), "(.)", BpeD1 + "$1" + BpeD2).as("sq"),
-        col("n"))
-      .localCheckpoint()
-    val out = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    var done = false
-    while (!done && out.size < nMerges) {
-      // adjacent symbol pairs within each word, frequency-weighted
-      val top = wf
-        .select(col("n"), split(regexp_replace(col("sq"),
-          "^" + BpeD1 + "|" + BpeD2 + "$", ""), BpeD2 + BpeD1).as("syms"))
-        .where(size(col("syms")) >= 2)
-        .select(col("n"), explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(syms[i - 1] AS x, syms[i] AS y))")).as("p"))
-        .groupBy(col("p.x"), col("p.y")).agg(sum("n").as("cnt"))
-        .orderBy(col("cnt").desc, col("x"), col("y"))
-        .limit(1).collect() // 1 row — the argmax, never the table
-      if (top.isEmpty) done = true
-      else {
-        val (x, y) = (top.head.getString(0), top.head.getString(1))
-        out += ((x, y))
-        // checkpoint per iteration: caps the replace-chain plan depth
-        // and re-materializes the vocab-sized table (trivial bytes).
-        // r17 MEASURED the cut-free variant (argmax recomputes i narrow
-        // replaces from the wf0 checkpoint): 1.03 -> 1.61 s at sf0.1 —
-        // each iteration then compiles a GROWING whole-stage-codegen
-        // source (i replace nodes of fresh literals, no codegen-cache
-        // hit), and the compile tax exceeds the checkpoint job it saves.
-        // The per-iteration cut stays.
-        wf = wf.select(replace(col("sq"),
-            lit(BpeD1 + x + BpeD2 + BpeD1 + y + BpeD2),
-            lit(BpeD1 + x + y + BpeD2)).as("sq"), col("n"))
-          .localCheckpoint()
-      }
-    }
-    out.toSeq
-  }
-
   val BpeTrainN = 8 // gated-training depth (the loop is the point, not the vocab)
 
-  /** Declared query hash-gating [[bpeTrain]] ITSELF: the first
-    * [[BpeTrainN]] merges learned from this sf dir's corpus. The oracle
-    * unrolls the greedy loop into chained MATERIALIZED CTEs — per
-    * iteration one pair-count aggregate, a (count desc, pair asc)
-    * argmax, and a corpus rewrite whose replace arguments are scalar
-    * subqueries of that argmax — the same
-    * iterative-training-in-the-oracle discipline as the unrolled Lloyd
-    * loop in `similar_ann_kmeans` (MATERIALIZED matters: inlining the
-    * chain re-expands every level ~5x and goes exponential). */
+  /** The corpus [[qBpeTrain]] and [[bpeMergesArtifact]] train on: the
+    * balanced `documents` text, normalized into column `t` (the
+    * [[bpeTrainBatched]] input contract). */
+  private def bpeDocCorpus(s: SparkSession, dir: String): DataFrame =
+    Tables.balanced(Tables.documents(s, dir)).select(norm(col("text")).as("t"))
+
+  /** Declared query hash-gating the trainer [[bpeTrainBatched]] ITSELF:
+    * the first [[BpeTrainN]] merges learned from this sf dir's corpus.
+    * The `documents` vocabulary is a few dozen words, so training runs
+    * in the in-memory regime: one word-frequency job and a bounded
+    * collect. The oracle unrolls the SEQUENTIAL greedy loop into
+    * chained MATERIALIZED CTEs — per iteration one pair-count
+    * aggregate, a (count desc, pair asc) argmax, and a corpus rewrite
+    * whose replace arguments are scalar subqueries of that argmax — the
+    * same iterative-training-in-the-oracle discipline as the unrolled
+    * Lloyd loop in `similar_ann_kmeans` (MATERIALIZED matters: inlining
+    * the chain re-expands every level ~5x and goes exponential). */
   def qBpeTrain(s: SparkSession, dir: String): DataFrame = {
-    val merges = bpeTrain(Tables.balanced(Tables.documents(s, dir)), BpeTrainN)
+    val merges = bpeTrainBatched(bpeDocCorpus(s, dir), BpeTrainN)
     import s.implicits._
     merges.zipWithIndex
       .map { case ((x, y), i) => ((i + 1).toLong, x, y) }
@@ -941,7 +904,7 @@ object Text {
        |ORDER BY rank""".stripMargin
   }
 
-  /** Trained-merges artifact: the per-corpus [[bpeTrain]] output
+  /** Trained-merges artifact: the per-corpus [[bpeTrainBatched]] output
     * persisted as a tiny (rank, x, y) parquet under the same
     * fingerprint-keyed lifecycle as the k-means codebook and bigram-LM
     * ([[graft.sources.Artifacts.cached]]): train once per source
@@ -950,7 +913,7 @@ object Text {
   def bpeMergesArtifact(s: SparkSession, dir: String): Seq[(String, String)] = {
     val src = s"$dir/documents.parquet"
     val df = graft.sources.Artifacts.cached(s, "bpe_merges", src) {
-      val m = bpeTrain(Tables.balanced(Tables.documents(s, dir)), BpeTrainN)
+      val m = bpeTrainBatched(bpeDocCorpus(s, dir), BpeTrainN)
       import s.implicits._
       m.zipWithIndex.map { case ((x, y), i) => ((i + 1).toLong, x, y) }
         .toDF("rank", "x", "y")
@@ -997,8 +960,8 @@ object Text {
   }
 
   /** Fixed merges fixture for the gated queries: the verbatim output of
-    * `bpeTrain(documents @ sf0.1, 24)` — trained once offline (this
-    * round), committed as a literal so the DuckDB oracle can apply the
+    * [[bpeTrainBatched]] over the normalized `documents` @ sf0.1 at 24
+    * merges — trained once offline, committed as a literal so the DuckDB oracle can apply the
     * identical list. A production deployment would persist the trained
     * list via [[graft.sources.Artifacts]] exactly like the perplexity
     * bigram-LM; the apply path is identical either way. */
@@ -1186,16 +1149,18 @@ object Text {
     * COMPUTE that wants executors and never fits the driver budget. */
   val BpeDriverVocabLimit: Long = 1L << 17
 
-  /** Exact batched greedy BPE training over `corpus.t` — returns the
-    * IDENTICAL list the sequential [[bpeTrain]] loop produces. The ONE
+  /** Exact batched greedy BPE training over `corpus.t` — the one BPE
+    * trainer. Returns the IDENTICAL list the sequential greedy loop
+    * produces (that loop is the test-scope reference
+    * `KernelRefs.bpeTrain`). The ONE
     * corpus-scale pass is the word-frequency groupBy (classic BPE trains
     * on the vocab table — sublinear in corpus). Small vocabularies
     * (≤ `driverVocabLimit` rows) then train in-memory; large ones run
     * distributed batched passes — per pass, pair counts and created-pair
     * bounds in ONE job, then the longest sorted candidate PREFIX that
     * provably commutes with sequential greedy (see the section comment's
-    * rules (a)/(b)), applied as one rewrite. TextSpec pins all three
-    * paths (in-memory, distributed, sequential) pairwise equal. */
+    * rules (a)/(b)), applied as one rewrite. TextSpec pins both
+    * regimes equal to the sequential reference. */
   def bpeTrainBatched(corpus: DataFrame, nMerges: Int,
                       batchK: Int = BpeBatchK,
                       driverVocabLimit: Long = BpeDriverVocabLimit,
@@ -1234,11 +1199,16 @@ object Text {
                            driverVocabLimit: Long = BpeDriverVocabLimit,
                            minFreq: Long = 1L,
                            measureDelta: Boolean = false): BpeTrainStats = {
+    // The one corpus-scale pass, checkpointed: the regime test, the
+    // in-memory collect and the distributed word table all read this
+    // vocab-sized table (uncut, each would re-run the corpus aggregation,
+    // which dominates at sf10).
     val wfWords = corpus.select(explode(split(col("t"), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
       .where(col("n") >= minFreq)
-    if (wfWords.limit(driverVocabLimit.toInt + 1).count() <= driverVocabLimit) {
+      .localCheckpoint()
+    if (wfWords.count() <= driverVocabLimit) {
       val m = bpeTrainInMemory(
         wfWords.collect().map(r => (r.getString(0), r.getLong(1))), nMerges)
       return BpeTrainStats(m, "driver", m.size)
@@ -1385,7 +1355,7 @@ object Text {
     // term that dominates a 2^17-word 512-merge train. Semantics are
     // UNCHANGED to the letter (argmax tie-break (count desc, x, y),
     // leftmost-non-overlap apply): TextSpec pins this loop against the
-    // sequential corpus trainer and the train512 oracle hash-gates it.
+    // sequential reference trainer and the train512 oracle hash-gates it.
     val words: Array[Array[String]] =
       wf0.map { case (w, _) => w.toCharArray.map(String.valueOf) }
     val freq: Array[Long] = wf0.map(_._2)

@@ -1,9 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.Num.{dbl, dec}
 import graft.sources.Tables
 
@@ -14,10 +12,10 @@ import graft.sources.Tables
   * joins — Catalyst plans a non-equi join condition as a broadcast
   * nested-loop, which is O(|L|·|R|) per key and disqualifying at 100 TB:
   *
-  *  - as-of: tag both sides, UNION, and carry the last right-side row
-  *    forward with a running `last(ignoreNulls)` window — ONE shuffle on
-  *    the key, O(1) state per row (the standard streaming-systems
-  *    formulation of as-of).
+  *  - as-of: the native [[graft.plans.AsOfJoin]] operator — both sides
+  *    hash-clustered and sorted on the key, then one streaming merge
+  *    pass with O(1) state per partition. Its union+window reference
+  *    form lives in test scope (`KernelRefs.asOfJoin`).
   *  - interval: quantize time into fixed bins; intervals replicate to
   *    the bins they overlap (≤ ⌈len/bin⌉ + 1 rows), points map to exactly
   *    one bin, and the pairing is a keyed EQUI-join on (key, bin) with a
@@ -29,61 +27,6 @@ import graft.sources.Tables
   * discipline as [[Events]]).
   */
 object TimeJoin {
-
-  /** Point-in-time join: for each `left` row, the single most recent
-    * `right` row with `rightTime <= leftTime` on the same `key`.
-    * Left-outer semantics — unmatched left rows keep NULL right fields.
-    *
-    * Determinism under ties: a right row at exactly `leftTime` DOES
-    * match (<=); among right rows sharing a timestamp the one with the
-    * greatest `rightTie` wins. The union ordering encodes both rules:
-    * (time, side, tie) with right=0 sorting before left=1.
-    *
-    * `rightPayload` columns are exposed on the output prefixed with
-    * `prefix`; `prefix + rightTime` carries the matched row's time.
-    * Output: all left columns ++ prefixed payload.
-    */
-  def asOfJoin(left: DataFrame, right: DataFrame, key: Seq[String],
-               leftTime: String, rightTime: String,
-               leftTie: String, rightTie: String,
-               rightPayload: Seq[String], prefix: String): DataFrame = {
-    // The greatest-tie-wins rule rides on cast("long"); a non-integral tie
-    // column (e.g. a string id) would silently cast to NULL and make the
-    // documented determinism vanish — reject it loudly instead.
-    def requireIntegral(df: DataFrame, c: String, side: String): Unit = {
-      val dt = df.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
-        s"asOfJoin $side tie column '$c' must be an integral type, got $dt")
-    }
-    requireIntegral(left, leftTie, "left")
-    requireIntegral(right, rightTie, "right")
-    val payloadCols = (rightTime +: rightPayload).distinct
-    val rStruct = struct(payloadCols.map(col): _*)
-    val rStructType = right.select(rStruct).schema.head.dataType
-    val l = left.select(
-      key.map(col) ++ Seq(
-        unix_micros(col(leftTime)).as("__t"),
-        lit(1).as("__side"),
-        col(leftTie).cast("long").as("__tie"),
-        lit(null).cast(rStructType).as("__r"),
-        struct(left.columns.map(col).toSeq: _*).as("__l")): _*)
-    val r = right.select(
-      key.map(col) ++ Seq(
-        unix_micros(col(rightTime)).as("__t"),
-        lit(0).as("__side"),
-        col(rightTie).cast("long").as("__tie"),
-        rStruct.as("__r"),
-        lit(null).cast(l.schema("__l").dataType).as("__l")): _*)
-    val w = Window.partitionBy(key.map(col): _*)
-      .orderBy(col("__t"), col("__side"), col("__tie"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val matched = l.unionByName(r)
-      .withColumn("__m", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-    val outLeft = left.columns.map(c => col(s"__l.$c").as(c))
-    val outRight = payloadCols.map(c => col(s"__m.$c").as(prefix + c))
-    matched.select((outLeft ++ outRight).toSeq: _*)
-  }
 
   /** Interval-containment join: `points` rows falling inside a half-open
     * interval `[startUs, endUs)` of `intervals` rows sharing `key`.
@@ -122,29 +65,10 @@ object TimeJoin {
   // -------------------------------------------------------------------
 
   /** For each purchase, the most recent prior click by the same user:
-    * attribution, the canonical as-of use. gap_us measures click-to-buy
-    * latency; purchases with no prior click pass through with NULLs. */
+    * attribution, the canonical as-of use, through the native operator
+    * ([[graft.plans.AsOfJoin]]). gap_us measures click-to-buy latency;
+    * purchases with no prior click pass through with NULLs. */
   def qAsof(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts", "value")
-    val clicks = ev.filter(col("event_type") === "click")
-      .select("event_id", "user_id", "ts")
-    asOfJoin(purchases, clicks, Seq("user_id"),
-      leftTime = "ts", rightTime = "ts",
-      leftTie = "event_id", rightTie = "event_id",
-      rightPayload = Seq("event_id"), prefix = "click_")
-      .withColumnRenamed("click_event_id", "click_id")
-      .withColumn("gap_us",
-        unix_micros(col("ts")) - unix_micros(col("click_ts")))
-      .orderBy("event_id")
-  }
-
-  /** The same point-in-time query through the NATIVE custom operator
-    * ([[graft.plans.AsOfJoin]] — logical node + strategy + merge exec)
-    * instead of the union+window composition, and gated by the SAME
-    * DuckDB oracle: two independent implementations, one semantic. */
-  def qAsofNative(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select("event_id", "user_id", "ts", "value")

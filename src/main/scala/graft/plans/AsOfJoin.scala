@@ -17,8 +17,9 @@ import org.apache.spark.sql.types._
   * strategy + physical operator; the builder installs the strategy into
   * the caller's session ([[GraftExtensions.ensure]]).
   *
-  * Semantics (identical to the composed [[graft.operators.TimeJoin
-  * .asOfJoin]], and gated by the SAME DuckDB oracle): for each left row,
+  * Semantics (pinned against the union+window reference form
+  * `KernelRefs.asOfJoin` in the specs, and gated by the DuckDB oracle
+  * of `events_asof`): for each left row,
   * the single right row with the greatest (time, tie) such that
   * `rightTime <= leftTime` on the same (multi-column) key. Left-outer by
   * default — unmatched left rows keep NULL right fields; the inner
@@ -233,7 +234,8 @@ object AsOfJoin {
   /** Native as-of join of `left` against `right` on a composite
     * equi-key. Column names across the two sides must be disjoint
     * (rename before joining — the output is left.columns ++
-    * right.columns). `rightTie` breaks timestamp ties (greatest wins).
+    * right.columns). `rightTie` breaks timestamp ties (greatest wins)
+    * and must be integral: a string id would order "9" above "10".
     * `inner = false` keeps unmatched left rows with NULL right fields
     * (the default, matching the composed form); `inner = true` drops
     * them. Right-side attributes are re-aliased to fresh expression ids
@@ -257,6 +259,11 @@ object AsOfJoin {
         s"asOf time column '${a.name}' must be timestamp or long, got ${a.dataType}")
       a
     }
+    def requireTie(a: Attribute): Attribute = {
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(a.dataType),
+        s"asOf tie column '${a.name}' must be an integral type, got ${a.dataType}")
+      a
+    }
     val lks = leftKeys.map(attr(lPlan, _))
     val rks = rightKeys.map(attr(rPlan, _))
     lks.zip(rks).foreach { case (a, b) =>
@@ -266,7 +273,7 @@ object AsOfJoin {
     GraftExtensions.ensure(left.sparkSession)
     Bridge.ofRows(left.sparkSession, AsOfJoinNode(lPlan, rPlan, lks, rks,
       requireTime(attr(lPlan, leftTime)), requireTime(attr(rPlan, rightTime)),
-      attr(rPlan, rightTie), inner))
+      requireTie(attr(rPlan, rightTie)), inner))
   }
 
   /** Single-key left-outer form (the original operator surface). */

@@ -170,12 +170,12 @@ class ArtifactsSpec extends SparkSpec {
     assert(artifactDirs().length == 1,
       "repeat read over unchanged source must not retrain")
     // persisted == in-flight: the artifact IS the trainer's output
-    assert(m1 == Text.bpeTrain(docs(12), Text.BpeTrainN))
+    assert(m1 == KernelRefs.bpeTrain(docs(12), Text.BpeTrainN))
 
     Thread.sleep(5) // mtime tick
     docs(15).write.mode("overwrite").parquet(src)
     val m3 = Text.bpeMergesArtifact(spark, dir)
-    assert(m3 == Text.bpeTrain(docs(15), Text.BpeTrainN),
+    assert(m3 == KernelRefs.bpeTrain(docs(15), Text.BpeTrainN),
       "a mutated source must retrain on the fresh corpus")
     assert(artifactDirs().length == 2, "mutation adds exactly one fingerprint dir")
     artifactDirs().foreach { d =>

@@ -14,11 +14,23 @@ class AsOfNativeSpec extends SparkSpec {
   test("native == composed: identical rows on the sf events data") {
     val cols = Seq("event_id", "user_id", "ts", "value", "click_id",
       "click_ts", "gap_us").map(col)
-    val native = TimeJoin.qAsofNative(spark, sf).select(cols: _*)
+    val native = TimeJoin.qAsof(spark, sf).select(cols: _*)
       .collect().map(_.toString).toList
-    val composed = TimeJoin.qAsof(spark, sf).select(cols: _*)
+    // events_asof re-derived through the union+window reference form
+    val ev = graft.sources.Tables.events(spark, sf)
+    val composed = KernelRefs.asOfJoin(
+        ev.filter(col("event_type") === "purchase")
+          .select("event_id", "user_id", "ts", "value"),
+        ev.filter(col("event_type") === "click")
+          .select("event_id", "user_id", "ts"),
+        Seq("user_id"), leftTime = "ts", rightTime = "ts",
+        leftTie = "event_id", rightTie = "event_id",
+        rightPayload = Seq("event_id"), prefix = "click_")
+      .withColumnRenamed("click_event_id", "click_id")
+      .withColumn("gap_us", unix_micros(col("ts")) - unix_micros(col("click_ts")))
+      .orderBy("event_id").select(cols: _*)
       .collect().map(_.toString).toList
-    assert(native === composed,
+    assert(native.nonEmpty && native === composed,
       "the custom exec and the union+window form must agree row for row")
   }
 
@@ -93,7 +105,7 @@ class AsOfNativeSpec extends SparkSpec {
     val clicks = ev.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         to_date(col("ts")).as("day"), col("ts"))
-    val composed = TimeJoin.asOfJoin(purchases, clicks, Seq("user_id", "day"),
+    val composed = KernelRefs.asOfJoin(purchases, clicks, Seq("user_id", "day"),
       leftTime = "ts", rightTime = "ts",
       leftTie = "event_id", rightTie = "click_id",
       rightPayload = Seq("click_id"), prefix = "m_")
@@ -107,7 +119,7 @@ class AsOfNativeSpec extends SparkSpec {
   }
 
   test("plan: AsOfJoinExec with exactly one exchange+sort per side") {
-    val df = TimeJoin.qAsofNative(spark, sf)
+    val df = TimeJoin.qAsof(spark, sf)
     // inspect the initial physical plan (pre-materialization): after AQE
     // stages materialize, collect() can no longer descend into them
     val plan = df.queryExecution.executedPlan match {

@@ -80,6 +80,20 @@ class ClusterSpec extends SparkSpec {
     assert(stars == prop, s"star=$stars prop=$prop")
   }
 
+  test("star variant alone gives connectedComponents' labels on the verified near-dup pairs") {
+    // the real dedup_clusters input: Jaccard-verified pairs of documents.
+    // connectedComponents is oracle-gated through dedup_clusters, and
+    // the star loop is the path it falls back to on deep graphs
+    val pairs = graft.operators.Dedup.jaccardOverCandidates(
+        graft.sources.Tables.documents(spark, sf))
+      .select(col("doc_a").as("a"), col("doc_b").as("b"))
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val prop = labels(Cluster.connectedComponents(pairs))
+    assert(prop.size >= 2, s"the spec corpus must carry verified pairs, got $prop")
+    assert(labels(Cluster.connectedComponentsStars(pairs)) == prop)
+  }
+
   test("star variant: empty input, single edge, already-star input") {
     assert(Cluster.connectedComponentsStars(
       Seq.empty[(Long, Long)].toDF("a", "b")).isEmpty)

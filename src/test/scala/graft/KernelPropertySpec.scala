@@ -56,7 +56,7 @@ class KernelPropertySpec extends SparkSpec {
           "ts", "click_ts", "click_id")
         .select("event_id", "click_id").collect()
         .map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
-      val composed = graft.operators.TimeJoin.asOfJoin(
+      val composed = KernelRefs.asOfJoin(
           left, right.withColumnRenamed("c_user", "user_id"), Seq("user_id"),
           leftTime = "ts", rightTime = "click_ts",
           leftTie = "event_id", rightTie = "click_id",

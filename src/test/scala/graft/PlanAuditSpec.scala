@@ -434,8 +434,11 @@ class PlanAuditSpec extends SparkSpec {
       // stages — only 2 carry data volume (tf agg, per-doc score agg)
       "sample_stratified" -> 1, "media_frames" -> 1,
       "text_vocab" -> 3, "text_bm25" -> 8,
-      // round-4 additions: asof/rolling = keyed window + presentation
-      // sort; interval = two join sides + sort; moving_avg/quartiles =
+      // round-4 additions: asof = one key exchange per side into the
+      // native merge exec + the presentation sort (a union+window form
+      // would share one exchange, but materializes the union and buffers
+      // the window); rolling = keyed window + presentation sort; interval = two join
+      // sides + sort; moving_avg/quartiles =
       // one agg + sort; deciles = source window + agg + sort; salted =
       // salted join + agg; setops = 2 distincts + 2 join sides + sort
       // (the single-pass full-outer form — three literal set-op passes
@@ -444,7 +447,7 @@ class PlanAuditSpec extends SparkSpec {
       // re-aggregate over GROUPS (the Expand now multiplies dozens of
       // rows, not |fact| — the sf10 ~99 s-task-CPU stage this removed)
       // + presentation sort
-      "events_asof" -> 2, "events_rolling" -> 2, "events_interval" -> 3,
+      "events_asof" -> 3, "events_rolling" -> 2, "events_interval" -> 3,
       "kpi_moving_avg" -> 2, "kpi_rollup" -> 3, "kpi_cube" -> 3,
       "kpi_quartiles" -> 2,
       // join_salted: 3 since r17 — the big side is balanced() before the
@@ -492,10 +495,11 @@ class PlanAuditSpec extends SparkSpec {
       // tokens = pre-explode-free balance + presentation sort only;
       // pack_bpe = pack's source window + shard agg + sort; the
       // trained twin reads the 8-row merges artifact on the driver, so
-      // its plan is identical to tokens; bpe_train's DECLARED frame is
-      // the collected merges (training jobs run at build time — each
-      // iteration one vocab-sized shuffle — and the returned plan
-      // carries just the 8-row localized sort)
+      // its plan is identical to tokens, whichever trainer filled the
+      // artifact; bpe_train's DECLARED frame is the collected merges
+      // (bpeTrainBatched runs at build time — the documents vocabulary
+      // trains in memory after one word-frequency job — and the returned
+      // plan carries just the 8-row localized sort)
       "text_tokens_bpe" -> 2, "pipeline_pack_bpe" -> 3,
       "text_tokens_bpe_trained" -> 2, "text_bpe_train" -> 1,
       // round-7 additions: linedup = chunk window + doc regroup/join +
@@ -548,11 +552,6 @@ class PlanAuditSpec extends SparkSpec {
       // activity distinct + dau agg + exploded distinct + wau agg +
       // join/sort (all map-side combined over the collapsed frame)
       "catalog_histogram_depth" -> 3, "events_wau" -> 6,
-      // native as-of = one key exchange per side into the merge exec +
-      // the presentation sort (the composed form saves one by sharing
-      // the union's exchange; the native exec skips the union
-      // materialization + window buffer instead)
-      "events_asof_native" -> 3,
       // transitions = user lag window + |types|² matrix agg + its tiny
       // normalization window + sort; slo = the tumbling-shaped hourly
       // agg + sort
@@ -563,12 +562,10 @@ class PlanAuditSpec extends SparkSpec {
       "text_langid_eval" -> 3, "pipeline_mixture" -> 2,
       // round-16: the 512-merge gates stay IN-ROW like the rest of the
       // BPE family (train512's declared frame is the localized merges
-      // sort; tokens512 is scan + kernel + presentation sort); the
-      // star-CC variant's declared frame joins the checkpointed
-      // components (iteration shuffles run at build time); hilbert =
+      // sort; tokens512 is scan + kernel + presentation sort); hilbert =
       // zorder3's box agg shape
       "text_bpe_train512" -> 1, "text_tokens_bpe512" -> 1,
-      "dedup_clusters_stars" -> 5, "layout_hilbert" -> 3)
+      "layout_hilbert" -> 3)
     pins.foreach { case (name, pin) =>
       val n = executed(name).collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
@@ -617,7 +614,7 @@ class PlanAuditSpec extends SparkSpec {
       df.collect()
       nodes
     }
-    Seq("events_asof_native", "events_asof_multi", "events_asof_inner").foreach { name =>
+    Seq("events_asof", "events_asof_multi", "events_asof_inner").foreach { name =>
       assert(executedNodes(name).exists(_.isInstanceOf[AsOfJoinExec]), s"$name: no AsOfJoinExec")
     }
     Seq("dedup_embed_planted" -> "graft_sign_bands", "dedup_embed_scaled" -> "graft_sign_bands",

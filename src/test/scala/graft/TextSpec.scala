@@ -256,13 +256,29 @@ class TextSpec extends SparkSpec {
   }
 
   test("bpe: train recovers hand-computed merges with lexicographic tie-break and early stop") {
+    // the one trainer in both regimes (driverVocabLimit = 0 forces the
+    // distributed passes) and the sequential reference, on one corpus
+    def trained(texts: Seq[String], n: Int): Map[String, Seq[(String, String)]] = {
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val corpus = docs.select(graft.functions.Hashes.normText(col("text")).as("t"))
+      Map("in-memory" -> Text.bpeTrainBatched(corpus, n),
+        "distributed" -> Text.bpeTrainBatched(corpus, n, driverVocabLimit = 0),
+        "reference" -> KernelRefs.bpeTrain(docs, n))
+    }
+    def check(texts: Seq[String], n: Int, want: Seq[(String, String)], why: String) =
+      trained(texts, n).foreach { case (path, got) =>
+        assert(got == want, s"$path: $why, got $got")
+      }
     // freq: ab x3, ac x1 -> pair (a,b):3 wins, then (a,c):1, then dry
-    val docs = Seq((1L, "ab ab ac"), (2L, "ab")).toDF("doc_id", "text")
-    assert(Text.bpeTrain(docs, 5) == Seq(("a", "b"), ("a", "c")),
+    check(Seq("ab ab ac", "ab"), 5, Seq(("a", "b"), ("a", "c")),
       "greedy argmax + early stop when no pairs remain")
     // tie at count 1: (a,b) < (b,a) lexicographically
-    val tie = Seq((1L, "ab ba")).toDF("doc_id", "text")
-    assert(Text.bpeTrain(tie, 2) == Seq(("a", "b"), ("b", "a")))
+    check(Seq("ab ba"), 2, Seq(("a", "b"), ("b", "a")), "lexicographic tie-break")
+    // nothing to merge: no words at all (an empty vocabulary trains in
+    // memory under any limit), and words of one character only
+    check(Nil, 3, Nil, "empty corpus")
+    check(Seq("a b  c", "", "d a"), 3, Nil, "one-character words")
   }
 
   test("bpe: fixture is well-formed (operands are base chars or earlier outputs)") {
@@ -318,7 +334,7 @@ class TextSpec extends SparkSpec {
     val entity = Text.bpeEntityCorpus(spark, sf)
     val seqWords = entity.select(col("t").as("text"))
       .withColumn("doc_id", lit(0L))
-    val seq64 = Text.bpeTrain(seqWords, 64)
+    val seq64 = KernelRefs.bpeTrain(seqWords, 64)
     // in-memory regime (the gate path at this vocab size)
     assert(Text.bpeTrainBatched(entity, 64) == seq64,
       "entity corpus: in-memory batched must equal sequential at 64 merges")
@@ -328,7 +344,7 @@ class TextSpec extends SparkSpec {
     val docs = graft.sources.Tables.documents(spark, sf)
     val docCorpus = docs.select(
       graft.functions.Hashes.normText(col("text")).as("t"))
-    val seqDoc = Text.bpeTrain(docs, 32)
+    val seqDoc = KernelRefs.bpeTrain(docs, 32)
     assert(Text.bpeTrainBatched(docCorpus, 32) == seqDoc,
       "documents: in-memory batched must equal sequential at 32 merges")
     assert(Text.bpeTrainBatched(docCorpus, 32, driverVocabLimit = 0) == seqDoc,

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.TimeJoin
+import graft.plans.AsOfJoin
 
 /** Temporal-join semantics on hand fixtures (tie rules, boundary rules)
   * plus the scale invariant that motivates the formulations: neither
@@ -30,35 +31,47 @@ class TimeJoinSpec extends SparkSpec {
     (14L, "c", ts(100))    // key with no right side at all -> NULLs
   ).toDF("event_id", "k", "ts")
 
-  private lazy val asof = TimeJoin.asOfJoin(trades, quotes, Seq("k"),
-    leftTime = "ts", rightTime = "ts",
-    leftTie = "event_id", rightTie = "event_id",
-    rightPayload = Seq("event_id", "px"), prefix = "q_")
-    .select("event_id", "q_event_id", "q_px")
-    .as[(Long, Option[Long], Option[Double])].collect()
-    .map { case (k, qid, px) => k -> ((qid, px)) }.toMap
+  // the native operator (events_asof's one implementation) and its
+  // union+window reference form, each as event_id -> (quote id, px)
+  private def byTrade(df: DataFrame) =
+    df.select("event_id", "q_event_id", "q_px")
+      .as[(Long, Option[Long], Option[Double])].collect()
+      .map { case (k, qid, px) => k -> ((qid, px)) }.toMap
+  private lazy val forms = Seq(
+    "native" -> byTrade(AsOfJoin(trades,
+      quotes.select(quotes.columns.map(c => col(c).as("q_" + c)).toSeq: _*),
+      "k", "q_k", "ts", "q_ts", "q_event_id")),
+    "reference" -> byTrade(KernelRefs.asOfJoin(trades, quotes, Seq("k"),
+      leftTime = "ts", rightTime = "ts",
+      leftTie = "event_id", rightTie = "event_id",
+      rightPayload = Seq("event_id", "px"), prefix = "q_")))
 
   test("asOfJoin: no-prior-row and no-right-key rows pass through with NULLs") {
-    assert(asof(10L) === ((None, None)))
-    assert(asof(13L) === ((None, None)))
-    assert(asof(14L) === ((None, None)))
+    forms.foreach { case (form, asof) =>
+      assert(asof(10L) === ((None, None)), form)
+      assert(asof(13L) === ((None, None)), form)
+      assert(asof(14L) === ((None, None)), form)
+    }
   }
 
   test("asOfJoin: equal timestamps match, and the greatest tiebreak id wins") {
-    assert(asof(11L) === ((Some(3L), Some(3.0))))
-    assert(asof(12L) === ((Some(3L), Some(3.0))))
+    forms.foreach { case (form, asof) =>
+      assert(asof(11L) === ((Some(3L), Some(3.0))), form)
+      assert(asof(12L) === ((Some(3L), Some(3.0))), form)
+    }
   }
 
   test("asOfJoin: every left row survives exactly once (left-outer shape)") {
-    assert(asof.size === 5)
+    forms.foreach { case (form, asof) => assert(asof.size === 5, form) }
   }
 
   test("asOfJoin rejects non-integral tie columns instead of NULLing them") {
-    val badLeft = trades.withColumn("sid", col("event_id").cast("string"))
+    // a string id would order "9" above "10": the native operator refuses
+    // it when the plan is built, before any row is read
+    val badRight = quotes.select(col("event_id").cast("string").as("q_sid"),
+      col("k").as("q_k"), col("ts").as("q_ts"))
     val e = intercept[IllegalArgumentException] {
-      TimeJoin.asOfJoin(badLeft, quotes, Seq("k"), "ts", "ts",
-        leftTie = "sid", rightTie = "event_id",
-        rightPayload = Seq("px"), prefix = "q_")
+      AsOfJoin(trades, badRight, "k", "q_k", "ts", "q_ts", "q_sid")
     }
     assert(e.getMessage.contains("tie column"))
   }
@@ -127,8 +140,16 @@ class TimeJoinSpec extends SparkSpec {
   }
 
   test("asOfJoin shuffles once on the key: single window over the union") {
-    val plan = SparkEntry.queries("events_asof")(spark, sf)
-      .queryExecution.executedPlan.toString
+    // the reference form the as-of specs compare against at sf: one
+    // window over the union, so it stays cheap enough to run on the data
+    val ev = graft.sources.Tables.events(spark, sf)
+    val plan = KernelRefs.asOfJoin(
+        ev.filter(col("event_type") === "purchase").select("event_id", "user_id", "ts"),
+        ev.filter(col("event_type") === "click").select("event_id", "user_id", "ts"),
+        Seq("user_id"), leftTime = "ts", rightTime = "ts",
+        leftTie = "event_id", rightTie = "event_id",
+        rightPayload = Seq("event_id"), prefix = "click_")
+      .orderBy("event_id").queryExecution.executedPlan.toString
     assert(plan.contains("Window"), "expected the running-last window")
     // the union+window formulation needs exactly one keyed exchange (the
     // window partitioning) + the presentation sort's range exchange

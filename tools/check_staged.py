@@ -336,11 +336,6 @@ ORDER BY doc_a, doc_b""",
 csize AS (SELECT canonical_id, COUNT(*) AS n_members FROM cc GROUP BY canonical_id)
 SELECT doc_id, canonical_id, n_members
 FROM cc JOIN csize USING (canonical_id) ORDER BY doc_id""",
-    # the star variant is gated on component IDENTITY — same staged oracle
-    "dedup_clusters_stars": CC + """,
-csize AS (SELECT canonical_id, COUNT(*) AS n_members FROM cc GROUP BY canonical_id)
-SELECT doc_id, canonical_id, n_members
-FROM cc JOIN csize USING (canonical_id) ORDER BY doc_id""",
     # dedup_embed (demo banding) retired from the declared surface in r10
     "dedup_simhash": SIMHASH_FINAL,
     "dedup_embed_scaled": embed_final_sql(16, 0.95, 128),

@@ -11,9 +11,9 @@ CHUNKS=(
   "catalog_audit catalog_benford catalog_checksum catalog_columns catalog_corr catalog_drift catalog_histogram catalog_histogram_depth catalog_profile"
   "dedup_exact dedup_minhash dedup_simhash dedup_fuzzy dedup_fuzzy2"
   "dedup_jaccard dedup_embed_scaled dedup_embed_planted dedup_incremental dedup_incremental_compacted"
-  "dedup_clusters dedup_clusters_stars"
+  "dedup_clusters"
   "etl_cleanse etl_count etl_dedup_employees etl_dim_upsert etl_employee_upsert etl_fact_upsert etl_publish etl_quarantine etl_scd2 etl_snapshot_diff etl_surrogate_keys etl_union_evolve"
-  "events_asof events_asof_inner events_asof_multi events_asof_native events_attribution events_cdc events_funnel events_interval"
+  "events_asof events_asof_inner events_asof_multi events_attribution events_cdc events_funnel events_interval"
   "events_new_users events_props events_rolling events_sessions events_slo events_spike events_transitions events_wau events_window events_window_sliding"
   "join_anti join_basket join_salted join_semi join_skew_aqe"
   "kpi_anomalies kpi_anomalies_at_scale kpi_anomalies_dept kpi_by_dept kpi_cube kpi_delta_by_dept kpi_delta_company kpi_gapfill kpi_headcount_approx kpi_headcount_audit kpi_moving_avg"
