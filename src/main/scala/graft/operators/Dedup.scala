@@ -780,7 +780,7 @@ object Dedup {
   val ScaledThreshold = 0.95
 
   /** The next rung of the band-width ladder: the SAME 128-bit signature
-    * re-cut as 4 × 32-bit bands. Why it exists (ShuffleLab r10): at a
+    * re-cut as 4 × 32-bit bands. Why it exists (SHUFFLELAB_r10.json): at a
     * FIXED band width w, random-pair collisions cost ~bands · n²/2^w
     * candidates — quadratic in corpus size no matter how wide w is, it
     * only divides the constant. Measured: the 16-bit banding's shuffle

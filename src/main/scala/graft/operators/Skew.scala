@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import graft.functions.Num.{dbl, dec}
 import graft.sources.Tables
@@ -119,7 +120,10 @@ object Skew {
     * rung-1 lever, so the aqeoff sweep must not silently turn its
     * subject off (the lab-invariant rule of ADVICE r13); broadcast is
     * pinned off or the dim-sized orders side would dodge the shuffle
-    * the skew lives in. */
+    * the skew lives in. The join shuffles into 32 partitions whatever
+    * the session's count, since the byte knobs assume each non-hot
+    * partition holds ~0.3% of the rows: at 4 partitions
+    * (SPARK_GRAFT_CPUS=4) the split did not engage at sf0.1. */
   def skewAqeConfs(factRows: Long): Seq[(String, String)] = {
     // hot partition ≈ 90% of the fact at ~0.4-1.1 compressed B/row
     // (measured at sf0.001: 6000 rows → hot between 2 KB and 6 KB), so
@@ -131,6 +135,7 @@ object Skew {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "32",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> threshold.toString,
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> (threshold / 2).toString)
@@ -163,21 +168,20 @@ object Skew {
       .orderBy("o_orderpriority")
   }
 
-  /** Every node of the EXECUTED adaptive plan, descending through
+  /** Every node of an EXECUTED adaptive plan, descending through
     * query-stage wrappers: `QueryStageExec` is a leaf to TreeNode
     * traversal (its materialized subtree hangs off `.plan`, not
     * `children`), so a plain `collect` over a final AQE plan sees the
-    * stage shells and none of the joins/reads inside them. */
-  def finalPlanNodes(df: DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
+    * stage shells and none of the joins/reads inside them. Pass
+    * `df.queryExecution.executedPlan` after an action on `df`, or the
+    * plan of the `QueryExecution` an action ran. */
+  def finalPlanNodes(plan: SparkPlan): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] =
-      p.collect { case n => n }.flatMap {
-        case a: AdaptiveSparkPlanExec => a +: walk(a.executedPlan)
-        case q: QueryStageExec => q +: walk(q.plan)
-        case n => Seq(n)
-      }
-    walk(df.queryExecution.executedPlan)
+    plan.collect { case n => n }.flatMap {
+      case a: AdaptiveSparkPlanExec => a +: finalPlanNodes(a.executedPlan)
+      case q: QueryStageExec => q +: finalPlanNodes(q.plan)
+      case n => Seq(n)
+    }
   }
 
   /** True iff the executed (final adaptive) plan of `df` contains a
@@ -185,7 +189,7 @@ object Skew {
     * not just that the answer came out right. */
   def skewSplitEngaged(df: DataFrame): Boolean = {
     import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
-    finalPlanNodes(df).exists {
+    finalPlanNodes(df.queryExecution.executedPlan).exists {
       case smj: SortMergeJoinExec => smj.isSkewJoin
       case shj: ShuffledHashJoinExec => shj.isSkewJoin
       case _ => false

@@ -20,7 +20,7 @@ class ArtifactsSpec extends SparkSpec {
   test("cached trains exactly once per fingerprint; refresh retrains; sweep retires") {
     val kind = "test_cached"
     rmKind(kind)
-    val src = java.nio.file.Files.createTempDirectory("graft_art_src").toString + "/t.parquet"
+    val src = SparkSpec.tempDir("graft_art_src") + "/t.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(src)
     var trains = 0
     def model = { trains += 1; Seq((1L, 10L)).toDF("id", "score") }
@@ -50,7 +50,7 @@ class ArtifactsSpec extends SparkSpec {
   test("refresh refuses any layout change, in both directions (ADVICE r13)") {
     val kind = "test_refresh_guard"
     rmKind(kind)
-    val src = java.nio.file.Files.createTempDirectory("graft_art_guard").toString + "/t.parquet"
+    val src = SparkSpec.tempDir("graft_art_guard") + "/t.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(src)
     def model = Seq((1L, "x", 10L), (2L, "y", 20L)).toDF("id", "part", "score")
     // declare partitioned; flat refresh and differently-partitioned
@@ -77,7 +77,7 @@ class ArtifactsSpec extends SparkSpec {
   test("benign race: two concurrent writers of one fingerprint converge on identical content") {
     val kind = "test_race"
     rmKind(kind)
-    val src = java.nio.file.Files.createTempDirectory("graft_art_race").toString + "/t.parquet"
+    val src = SparkSpec.tempDir("graft_art_race") + "/t.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(src)
     val expect = Seq((1L, 10L), (2L, 20L))
     def model = expect.toDF("id", "score")
@@ -110,7 +110,7 @@ class ArtifactsSpec extends SparkSpec {
     val kind = "media_encoded"
     // an isolated source dir so the declared queries' cached artifacts
     // (keyed by the real testdata paths) are untouched
-    val dir = java.nio.file.Files.createTempDirectory("graft_media_src").toString
+    val dir = SparkSpec.tempDir("graft_media_src")
     val src = s"$dir/documents.parquet"
     def docs(n: Int) = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("doc_id") < n)
@@ -154,7 +154,7 @@ class ArtifactsSpec extends SparkSpec {
   test("bpe_merges artifact: train-once, read-back identity, mutation retrains once (r15)") {
     // isolated source dir — the declared queries' artifacts (keyed by
     // the real testdata paths) stay untouched
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_src").toString
+    val dir = SparkSpec.tempDir("graft_bpe_src")
     val src = s"$dir/documents.parquet"
     def docs(n: Int) = spark.read.parquet(s"$sf/documents.parquet")
       .filter(col("doc_id") < n)

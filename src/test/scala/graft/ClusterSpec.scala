@@ -129,7 +129,7 @@ class ClusterSpec extends SparkSpec {
     val expected = cc(edges)
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "suite assumes no ambient checkpoint dir")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = SparkSpec.tempDir("graft_ckpt")
     sc.setCheckpointDir(dir)
     try {
       assert(cc(edges) == expected)

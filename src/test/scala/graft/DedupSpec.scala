@@ -33,7 +33,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incremental: a new near-dup pairs against the persisted index, not the batch alone") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bandidx").toString
+    val tmp = SparkSpec.tempDir("graft_bandidx")
     // corpus indexed once (docs 1, 4); batch brings a near-dup of 1 + noise
     Dedup.bandIndex(Seq((1L, base), (4L, unrelated)).toDF("doc_id", "text"))
       .write.mode("overwrite").parquet(tmp)

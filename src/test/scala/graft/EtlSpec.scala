@@ -3,7 +3,6 @@ package graft
 import graft.operators.{Etl, Merge}
 import graft.sources.Sinks
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 /** SURVEY §5 suites for the ETL half: cleansing rules, keep-first dedup,
   * upsert idempotence + last-write-wins, surrogate determinism, and the
@@ -79,7 +78,7 @@ class EtlSpec extends SparkSpec {
   }
 
   test("partitioned sink: month layout + partition-scoped upsert rewrites only touched months") {
-    val dir = Files.createTempDirectory("graft_fact").toString
+    val dir = SparkSpec.tempDir("graft_fact")
     Sinks.writeFactPartitioned(Etl.facts(clean1), dir)
     val monthDirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(monthDirs.toSeq == Seq("month=2025-05-01", "month=2025-06-01"), monthDirs.mkString(","))

@@ -131,32 +131,33 @@ class HarnessSpec extends AnyFunSuite {
     finally src.close()
     val pinned = Set(
       "ANNLAB_NPROBE", "ANNLAB_OUT", "ANNLAB_PROBES", "AQE", "ARTIFACTS",
-      "BCAST_MB", "BENCH_ONLY", "BENCH_OUT", "BENCH_REPS", "BPELAB_OUT",
+      "BENCH_ONLY", "BENCH_OUT", "BENCH_REPS", "BPELAB_OUT",
       "CANARYLAB_OUT", "CANARYLAB_RUNS", "CHECKPOINT_DIR", "CPUS",
       "EXECUTOR_CLASSPATH", "EXECUTOR_MEM", "FAULTLAB_OUT",
       "LOG_LEVEL", "MASTER", "MEDIALAB_KS", "MEDIALAB_OUT",
-      "PUBLISHLAB_ITERS", "PUBLISHLAB_OUT", "SF_DIR", "SHUFFLELAB_OUT",
-      "SHUFFLELAB_QUERIES", "STREAMRESTART_OUT",
+      "PUBLISHLAB_ITERS", "PUBLISHLAB_OUT", "SF_DIR", "STREAMRESTART_OUT",
       "VERIFY_NATURAL").map("SPARK_GRAFT_" + _)
-    assert(pinned.size == 28)
+    assert(pinned.size == 25)
     assert(named == pinned,
       s"new: ${(named -- pinned).toSeq.sorted}; gone: ${(pinned -- named).toSeq.sorted}")
   }
 
-  test("no SparkListener is subclassed or added under src/main or in DriftProbe") {
-    // the labs read Spark's status store (StorageBridge.groupTotals)
+  test("no SparkListener is subclassed or added under src/main") {
+    // the labs and the bench profile read Spark's status store
+    // (StorageBridge.groupTotals)
     val listener = raw"(extends|with|new)\s+([\w.]+\.)?SparkListener\b|addSparkListener".r
     assert(listener.findFirstIn("new org.apache.spark.scheduler.SparkListener {").nonEmpty)
     assert(listener.findFirstIn("sc.addSparkListener(l)").nonEmpty)
     assert(listener.findFirstIn("import org.apache.spark.scheduler.SparkListenerTaskEnd").isEmpty)
+    // the bench's handle on the plan a write ran is not a SparkListener
+    assert(listener.findFirstIn("final class LastRun extends QueryExecutionListener {").isEmpty)
     val src = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
     val files = try src.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
     finally src.close()
-    val hits = (java.nio.file.Paths.get("src/test/scala/graft/DriftProbe.scala") :: files)
-      .flatMap { p =>
-        listener.findAllIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-          .map(m => s"$p: $m")
-      }
+    val hits = files.flatMap { p =>
+      listener.findAllIn(new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+        .map(m => s"$p: $m")
+    }
     assert(files.size > 50 && hits.isEmpty, hits.mkString("; "))
   }
 

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
 
   test("month-partitioned fact layout: a month filter reads ONLY that month's files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fact_layout").toString
+    val dir = SparkSpec.tempDir("graft_fact_layout")
     Tables.fact(spark, sf).write.partitionBy("month").mode("overwrite").parquet(dir)
 
     val monthDirs = new java.io.File(dir).listFiles()
@@ -188,7 +188,7 @@ class LayoutSpec extends SparkSpec {
     // user box a large fraction of the domain and mask the effect.
     val dir01 = "/root/testdata/sf0.01"
     val ev = Tables.events(spark, dir01)
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val base = SparkSpec.tempDir("graft_zorder")
     ev.repartitionByRange(64, col("ts")).sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(s"$base/linear")
     graft.sources.ZOrder.zOrdered(ev, "user_id", "ts", files = 64)
@@ -236,7 +236,7 @@ class LayoutSpec extends SparkSpec {
     import graft.sources.ZOrder
     val dir01 = s"${new java.io.File(sf).getParent}/sf0.01" // beside the suite's sf
     val ev = Tables.events(spark, dir01)
-    val base = java.nio.file.Files.createTempDirectory("graft_zorder3").toString
+    val base = SparkSpec.tempDir("graft_zorder3")
     val dims = Seq("user_id", "event_type", "ts")
     ZOrder.zOrderedN(ev, dims).write.mode("overwrite").parquet(s"$base/zorder3")
     ZOrder.zOrderedN(ev, dims, curve = "hilbert")

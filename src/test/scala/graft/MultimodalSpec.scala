@@ -226,7 +226,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("metadata pruning: filter on meta fields reads no blob bytes (column pruning)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_media").toString
+    val tmp = SparkSpec.tempDir("graft_media")
     Multimodal.decodeMeta(media).write.mode("overwrite").parquet(tmp)
     val q = spark.read.parquet(tmp)
       .filter(col("kind") === "image" && col("meta.width") > 512)

@@ -476,7 +476,8 @@ class PlanAuditSpec extends SparkSpec {
       // (ReusedExchange dedupes at runtime, as the jaccard test proves) —
       // the data-carrying shuffles are tf agg, df agg, doc window
       "etl_scd2" -> 3, "text_tfidf" -> 9,
-      // round-5 fourth/fifth batches (measured, graft.ProbeShuffles):
+      // round-5 fourth/fifth batches (measured: a wrong pin's message
+      // prints the initial plan's count):
       // semi = anti's dual (join keys + agg/sort); gapfill = monthly agg
       // + spine join + fill window reusing the join's emp partitioning +
       // sort; scrub/split = local-only balance or agg + sort; pack =
@@ -610,7 +611,7 @@ class PlanAuditSpec extends SparkSpec {
     // empty and AQE drops the empty subtrees
     def executedNodes(name: String) = {
       val df = SparkEntry.queries(name)(bare(), sf)
-      val nodes = graft.operators.Skew.finalPlanNodes(df)
+      val nodes = graft.operators.Skew.finalPlanNodes(df.queryExecution.executedPlan)
       df.collect()
       nodes
     }

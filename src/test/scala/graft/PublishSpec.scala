@@ -13,7 +13,7 @@ class PublishSpec extends SparkSpec {
   import sp.implicits._
 
   private def freshRoot() =
-    java.nio.file.Files.createTempDirectory("graft_publish").toString
+    SparkSpec.tempDir("graft_publish")
 
   /** Orphan sweeping is age-gated since r17 (a PEER's staged-but-not-
     * yet-committed generation is indistinguishable from a crashed

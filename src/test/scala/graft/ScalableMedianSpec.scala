@@ -60,7 +60,7 @@ class ScalableMedianSpec extends SparkSpec {
     graft.operators.Skew.withConfs(spark, confs) {
       val df = anomalies()
       val rows = df.collect().map(_.toSeq).toSeq
-      val spilled = graft.operators.Skew.finalPlanNodes(df).collect {
+      val spilled = graft.operators.Skew.finalPlanNodes(df.queryExecution.executedPlan).collect {
         case w: WindowExec => w.metrics("spillSize").value
       }
       assert(spilled.sum > 0, s"no WindowExec spilled: $spilled")

@@ -45,25 +45,18 @@ class SchemasSpec extends SparkSpec {
     // synthesized raw-INT64 events table (what a NANOS file reads as
     // under nanosAsLong, and what pre-r9 ScaleUp outputs contain).
     import org.apache.spark.sql.{functions => F}
-    val dir = java.nio.file.Files.createTempDirectory("evns").toFile
-    try {
-      val ns = 1704067798778549123L // 2024-01-01T00:09:58.778549123Z
-      val row = new org.apache.spark.sql.catalyst.expressions.GenericRow(
-        Array[Any](1L, ns, 5L, "click", 1.0, "{}"))
-      spark.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(row.toSeq)),
-          Schemas.events)
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val e = Tables.events(spark, dir.toString)
-      assert(e.schema("ts").dataType == TimestampType)
-      val us = e.select(F.unix_micros(F.col("ts"))).head.getLong(0)
-      assert(us == ns / 1000L, s"ns=$ns µs=$us")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir)
-    }
+    val dir = SparkSpec.tempDir("graft_evns")
+    val ns = 1704067798778549123L // 2024-01-01T00:09:58.778549123Z
+    val row = new org.apache.spark.sql.catalyst.expressions.GenericRow(
+      Array[Any](1L, ns, 5L, "click", 1.0, "{}"))
+    spark.createDataFrame(
+        java.util.Arrays.asList(org.apache.spark.sql.Row.fromSeq(row.toSeq)),
+        Schemas.events)
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val e = Tables.events(spark, dir)
+    assert(e.schema("ts").dataType == TimestampType)
+    val us = e.select(F.unix_micros(F.col("ts"))).head.getLong(0)
+    assert(us == ns / 1000L, s"ns=$ns µs=$us")
   }
 
   test("profile: one pass, hand-checkable stats, nulls counted") {

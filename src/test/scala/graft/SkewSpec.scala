@@ -70,7 +70,7 @@ class SkewSpec extends SparkSpec {
       // skewed side must report split partitions, not just a relabeled join
       // (finalPlanNodes descends into QueryStageExec shells — a plain
       // collect over the final plan sees none of the reads inside them)
-      val skewedParts = Skew.finalPlanNodes(df)
+      val skewedParts = Skew.finalPlanNodes(df.queryExecution.executedPlan)
         .collect { case r: AQEShuffleReadExec => r }
         .flatMap(_.metrics.get("numSkewedPartitions")).map(_.value).sum
       assert(skewedParts > 0, "AQEShuffleRead reports zero skewed partitions")

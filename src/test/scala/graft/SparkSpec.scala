@@ -21,13 +21,20 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
+      .config("spark.sql.warehouse.dir", tempDir("graft_warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** A fresh directory under the temp dir, deleted with everything in it
+    * when the test JVM exits. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toString
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -224,7 +224,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming keyed upsert via foreachBatch: last write wins across batches") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert").toString
+    val tmp = SparkSpec.tempDir("graft_upsert")
     val stream = MemoryStream[Event](spark)
     val q = Streams.upsertStream(stream.toDF(), Seq("event_id"),
       org.apache.spark.sql.functions.col("ts").desc, s"$tmp/table", s"$tmp/ckpt")
@@ -243,7 +243,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming incremental dedup: later batches match the persisted band index") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val tmp = SparkSpec.tempDir("graft_ingest")
     val base = "the quick brown fox jumps over the lazy dog while the cat " +
       "sleeps on the warm mat near the door"
     val stream = MemoryStream[(Long, String)](spark)
@@ -280,7 +280,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming decontam: two train micro-batches == the one-shot embedReport") {
     import graft.operators.Decontam
     import org.apache.spark.sql.functions.col
-    val tmp = java.nio.file.Files.createTempDirectory("graft_decontam").toString
+    val tmp = SparkSpec.tempDir("graft_decontam")
     val (bench, trainDf) = Decontam.plantedSides(spark, sf)
     val train = trainDf.as[StreamingSpec.TrainVec].collect().toSeq
     val stream = MemoryStream[StreamingSpec.TrainVec](spark)
@@ -344,7 +344,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("deployment shape: readStream -> windows -> parquet sink starts and stops clean") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val tmp = SparkSpec.tempDir("graft_stream")
     val q = Streams.fileStreamQuery(spark, sf, s"$tmp/ckpt", s"$tmp/out")
     try q.processAllAvailable() finally q.stop()
     assert(new java.io.File(s"$tmp/ckpt").exists, "checkpoint dir created")

@@ -118,7 +118,7 @@ class VectorExprsSpec extends SparkSpec {
     val withCg = q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // inspect the FINAL adaptive plan (after execution), descending
     // through query-stage shells — the Skew.finalPlanNodes discipline
-    assert(graft.operators.Skew.finalPlanNodes(q)
+    assert(graft.operators.Skew.finalPlanNodes(q.queryExecution.executedPlan)
         .exists(_.isInstanceOf[WholeStageCodegenExec]),
       s"expected WholeStageCodegen in:\n${q.queryExecution.executedPlan}")
     spark.conf.set("spark.sql.codegen.wholeStage", "false")

@@ -195,7 +195,7 @@ class ZOrderSpec extends SparkSpec {
       val ts = new java.sql.Timestamp(1704067200000L + (i.toLong * 86400000L / n))
       (u, ts, i.toLong)
     }.toDF("user_id", "ts", "v")
-    val base = java.nio.file.Files.createTempDirectory("graft_zskew").toString
+    val base = SparkSpec.tempDir("graft_zskew")
     // 128 files: tiles must be FINER than the dense users' rank
     // footprint (~21 equi-depth buckets per hot user) or file-level
     // stats still span several hot users and the box prunes nothing —
@@ -243,7 +243,7 @@ class ZOrderSpec extends SparkSpec {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val dir01 = "/root/testdata/sf0.01"
     val ev = Tables.events(spark, dir01)
-    val base = java.nio.file.Files.createTempDirectory("graft_zappend").toString + "/layout"
+    val base = SparkSpec.tempDir("graft_zappend") + "/layout"
     graft.sources.ZOrder.zOrdered(ev, "user_id", "ts", files = 64)
       .write.mode("overwrite").parquet(base)
     // batch: a fresh day of activity for the boxed cohort (ids offset
@@ -383,7 +383,7 @@ class ZOrderSpec extends SparkSpec {
       val ts = new java.sql.Timestamp(1704067200000L + (i.toLong * 86400000L / n))
       (u, ts, s"cat${i % 5}", i.toLong)
     }.toDF("user_id", "ts", "cat", "v")
-    val base = java.nio.file.Files.createTempDirectory("graft_zskew3").toString
+    val base = SparkSpec.tempDir("graft_zskew3")
     ZOrder.zOrderedN(rows, Seq("user_id", "ts", "cat"), files = 128)
       .write.mode("overwrite").parquet(s"$base/linear3")
     ZOrder.zOrderedEquiDepthN(rows, Seq("user_id", "ts", "cat"), files = 128)

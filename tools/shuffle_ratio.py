@@ -1,11 +1,23 @@
 #!/usr/bin/env python3
-"""Merge two graft.ShuffleLab per-sf JSONs into one artifact with scaling
-ratios. For a 10x data step, a ratio near 10 on shuffle_write_bytes means
-the operator's network cost is linear in the input; a ratio far above the
-row-growth factor is the quadratic-candidate signature the lab exists to
-catch (see ShuffleLab.scala scaladoc).
+"""Merge two graft.Bench profile.json files, taken at two scale factors,
+into one artifact with scaling ratios. For a 10x data step, a ratio near 10
+on shuffle_write_bytes means the operator's network cost is linear in the
+input; a ratio far above the row-growth factor is the signature of a
+quadratic candidate explosion that wall time in one JVM (where a shuffle is
+a memcpy) and the exchange-count pins in PlanAuditSpec cannot see.
 
-Usage: shuffle_ratio.py <small_sf.json> <big_sf.json> <out.json> [step]
+The shuffle-heavy audit set (every dedup family member, the composite
+pipelines, the text/TF-IDF shuffles, sessionization, the as-of join, and
+two KPI star joins as a low-water control), one run per scale factor:
+
+  SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_BENCH_OUT=<dir>/bench_full.json \
+  SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_BENCH_ONLY=dedup_exact,dedup_minhash,\
+dedup_jaccard,dedup_simhash,dedup_fuzzy,dedup_incremental,dedup_embed_scaled,\
+dedup_clusters,pipeline_curate,pipeline_decontam,text_heavy,text_tfidf,\
+events_sessions,events_asof,similar_topk,kpi_by_dept,kpi_anomalies_at_scale \
+    sbt "runMain graft.Bench"          # writes <dir>/profile.json
+
+Usage: shuffle_ratio.py <small_profile.json> <big_profile.json> <out.json> [step]
        step = the data growth factor between the two runs (default 10).
 """
 import json
@@ -17,11 +29,16 @@ def main() -> None:
     step = float(sys.argv[4]) if len(sys.argv) > 4 else 10.0
     small = json.load(open(small_path))
     big = json.load(open(big_path))
+    def totals(record):
+        # the scalar totals; the stage rows and node metrics stay in the profiles
+        return {k: v for k, v in record.items() if not isinstance(v, (list, dict))}
+
     merged = {}
     for name, s in small["queries"].items():
         b = big["queries"].get(name)
         if b is None:
             continue
+        s, b = totals(s), totals(b)
 
         def ratio(key):
             return round(b[key] / s[key], 2) if s.get(key) else None
