@@ -54,6 +54,18 @@ object Bench {
     def take(): Option[QueryExecution] = Option(ran.getAndSet(null))
   }
 
+  /** The shuffle-read counters of push-based shuffle, which reads merged
+    * blocks only with `spark.shuffle.push.enabled` on YARN with the
+    * external shuffle service; no master this engine runs under enables
+    * it, so they are left out of a profile by name. The remote-fetch counters
+    * and `fetchWaitTime` stay (they move under `local-cluster`), and so
+    * does `spillSize` (it moves when a sort spills). */
+  private[graft] val PushMergeMetrics: Set[String] = Set(
+    "corruptMergedBlockChunks", "mergedFetchFallbackCount",
+    "localMergedBlocksFetched", "localMergedBytesRead", "localMergedChunksFetched",
+    "remoteMergedBlocksFetched", "remoteMergedBytesRead", "remoteMergedChunksFetched",
+    "remoteMergedReqsDuration")
+
   /** One timed rep: run the noop write of `build` under job group
     * `group`, then, outside the timer, read its [[Profile]]. `None` if
     * the query threw; otherwise the wall seconds and the profile, or the
@@ -79,7 +91,9 @@ object Bench {
     else Some(sec -> scala.util.Try {
       val plan = ran.getOrElse(sys.error("the write's QueryExecution was not delivered")).executedPlan
       Profile(sec, totals.get, Skew.finalPlanNodes(plan).collect {
-        case n if n.metrics.nonEmpty => n.nodeName -> n.metrics.map { case (k, m) => k -> m.value }
+        case n if n.metrics.nonEmpty => n.nodeName -> n.metrics.collect {
+          case (k, m) if !PushMergeMetrics(k) => k -> m.value
+        }
       })
     }.toEither.left.map(_.toString))
   }
@@ -117,10 +131,10 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     // All gate knobs (master / executor classpath+memory / AQE /
     // checkpoint / log level) come from the shared session fold — see
-    // GraftSession. ERROR default: the one recurring WARN is WindowExec's
-    // single-partition note for the dim surrogate-key window, by-design
-    // for dim-sized inputs (Etl.dimDept doc) — at WARN it floods the
-    // bench JSON's tail.
+    // GraftSession. ERROR default: the recurring WARN is WindowExec's
+    // single-partition note for the unpartitioned windows over
+    // aggregate-sized frames (running sums, ranks), by design — at WARN
+    // it floods the bench JSON's tail.
     val spark = GraftSession.build(defaultCpus = "4")
 
     // Optional comma-separated name filter for local iteration on a few

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.Schemas
+import scala.jdk.CollectionConverters._
 
 /** The reference's ETL half (`/root/reference/src/etl.py:1-77`,
   * `scripts/load_once.py:1-76`) rebuilt Spark-first: CSV scan with a
@@ -72,32 +74,46 @@ object Etl {
     Merge.keepFirst(clean, Seq("emp_id"), col("seq"))
       .select("emp_id", "dept", "job_grade", "location")
 
-  /** A6 + O3 + SERIAL analog: distinct dept names, sorted, numbered. The
-    * window is single-partition BY DESIGN: surrogate keys must be globally
-    * dense and deterministic, and a dim is tiny by definition (the fact
-    * table is what scales; 25 nations / 6 depts fit one partition at any
-    * fact scale). */
+  /** The dim table: the SERIAL-analog id and the dept name. */
+  private val DimSchema: StructType = StructType(Seq(
+    StructField("dept_id", IntegerType), StructField("dept_name", StringType)))
+
+  /** A6 + O3 + SERIAL analog: distinct dept names, sorted, numbered from
+    * 1 — [[dimUpsert]] into an empty dim, so it is eager too. */
   def dimDept(clean: DataFrame): DataFrame =
-    clean.filter(col("dept").isNotNull)
-      .select(col("dept").as("dept_name")).distinct()
-      .withColumn("dept_id",
-        row_number().over(Window.orderBy("dept_name")).cast("int"))
-      .select("dept_id", "dept_name")
+    dimUpsert(clean.sparkSession.createDataFrame(java.util.List.of[Row](), DimSchema), clean)
 
   /** S4: `INSERT … ON CONFLICT (dept_name) DO NOTHING` with SERIAL id
     * continuation — existing rows keep their ids, new names get
-    * max(existing id) + dense rank over sorted new names. Expressed as one
-    * lazy plan (the 1-row max id cross-joins in, broadcast). */
+    * max(existing id) + their rank among the sorted new names.
+    *
+    * Eager and driver-side, like a SERIAL sequence: one job collects the
+    * existing dim and the incoming batch's distinct names (deduplicated
+    * per partition, so no shuffle and at most partitions × names rows
+    * reach the driver), and the ids are assigned here. A dim is tiny by
+    * definition: the fact table is what scales. New names are ranked in
+    * Spark's string order (binary UTF-8, which differs from Java's UTF-16
+    * `String` order past the BMP), so the ids equal a Spark
+    * `row_number() OVER (ORDER BY dept_name)`. The result is a local
+    * relation, so every consumer (the dim write, the employees broadcast
+    * join) reads these rows instead of re-planning the batch scan. */
   def dimUpsert(existing: DataFrame, incomingClean: DataFrame): DataFrame = {
-    val incomingNames = incomingClean.filter(col("dept").isNotNull)
-      .select(col("dept").as("dept_name")).distinct()
-    val newNames = incomingNames.join(existing, Seq("dept_name"), "left_anti")
-    val maxId = existing.agg(coalesce(max("dept_id"), lit(0)).as("__maxid"))
-    val newRows = newNames.crossJoin(broadcast(maxId))
-      .withColumn("dept_id",
-        (col("__maxid") + row_number().over(Window.orderBy("dept_name"))).cast("int"))
-      .select("dept_id", "dept_name")
-    existing.unionByName(newRows)
+    val s = incomingClean.sparkSession
+    val names = incomingClean.select(col("dept")).filter(col("dept").isNotNull)
+      .mapPartitions((it: Iterator[Row]) => it.map(_.getString(0)).toSet.iterator)(Encoders.STRING)
+      .select(lit(null).cast("int").as("dept_id"), col("value").as("dept_name"),
+        lit(false).as("old"))
+    val rows = existing.select(col("dept_id").cast("int"), col("dept_name"), lit(true).as("old"))
+      .unionByName(names).collect()
+    val (old, in) = rows.partition(_.getBoolean(2))
+    // anti-join semantics: a NULL existing name matches nothing
+    val taken = old.flatMap(r => Option(r.getString(1))).toSet
+    val maxId = old.filterNot(_.isNullAt(0)).map(_.getInt(0)).maxOption.getOrElse(0)
+    val fresh = in.map(_.getString(1)).distinct.filterNot(taken)
+      .sortWith((a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
+    val out = old.map(r => Row(r.get(0), r.get(1))) ++
+      fresh.zipWithIndex.map { case (n, i) => Row(maxId + 1 + i, n) }
+    s.createDataFrame(out.toSeq.asJava, DimSchema)
   }
 
   /** S5 + J6: employee upsert (last-write-wins by emp_id) then surrogate

@@ -1,7 +1,10 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Multi-table atomic publish — the one documented transactionality gap
   * vs the reference (SURVEY §7.3): the reference wraps its 3-table load
@@ -15,6 +18,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   generations/gen-000007-<uuid>/   # all tables + _MANIFEST.json
   *   _log/c-00000007.commit           # one immutable file naming a gen
   * ```
+  *
+  * The manifest names the generation and lists each table with its
+  * schema, in Spark's JSON form (a Parquet read makes every field
+  * nullable, whether its schema is given or inferred):
+  *
+  * ```
+  * {"generation":"gen-000007-<uuid>",
+  *  "tables":[{"name":"dept","schema":{"type":"struct","fields":[…]}}, …]}
+  * ```
+  *
+  * [[readGeneration]] reads every table with its recorded schema, so
+  * resolving a generation runs no Spark job (a schema-less Parquet read
+  * runs one footer-inference job per table).
   *
   * Writers stage EVERY table of a generation under a fresh uniquely-named
   * directory (never touched by readers — no commit names it yet), then
@@ -62,6 +78,8 @@ object Publish {
     new Path(s"$root/generations/$gen")
 
   private def logDir(root: String) = new Path(s"$root/_log")
+
+  private val Json = new ObjectMapper()
 
   private val CommitRe = "^c-(\\d{8})\\.commit$".r
 
@@ -150,10 +168,15 @@ object Publish {
         }}), Duration.Inf)
       finally pool.shutdown()
     }
-    val manifest = tables.map(t => "\"" + t._1 + "\"")
-      .mkString(s"""{"generation":"$gen","tables":[""", ",", "]}")
+    val manifest = Json.createObjectNode()
+    manifest.put("generation", gen)
+    val list = manifest.putArray("tables")
+    tables.foreach { case (name, df) =>
+      list.addObject().put("name", name)
+        .set[JsonNode]("schema", Json.readTree(df.schema.json))
+    }
     val out = fs(s, dir).create(new Path(dir, "_MANIFEST.json"), false)
-    out.write(manifest.getBytes("UTF-8")); out.close()
+    out.write(Json.writeValueAsBytes(manifest)); out.close()
     gen
   }
 
@@ -210,19 +233,26 @@ object Publish {
 
   /** Resolve the live generation once and return every table of it —
     * the all-or-nothing read view. Resolving per-table instead would
-    * re-open the very mixed-generation window the log closes. */
+    * re-open the very mixed-generation window the log closes. Each table
+    * is read with the schema its manifest records, so this runs no Spark
+    * job. A manifest entry without a schema is refused: there is no
+    * inference fallback, since no publish root outlives the run that
+    * created it. */
   def readGeneration(s: SparkSession, root: String): Map[String, DataFrame] = {
     val gen = currentGen(s, root).getOrElse(
       throw new IllegalStateException(s"no generation published under $root"))
     val dir = genDir(root, gen)
     val f = fs(s, dir)
     val in = f.open(new Path(dir, "_MANIFEST.json"))
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-    val tables = "\"([^\"]+)\"".r.findAllMatchIn(
-        txt.substring(txt.indexOf("[")))
-      .map(_.group(1)).toSeq
-    tables.map(t => t -> s.read.parquet(new Path(dir, t).toString)).toMap
+    val manifest = try Json.readTree(in) finally in.close()
+    manifest.get("tables").elements.asScala.map { t =>
+      val schema = t.path("schema")
+      if (!schema.isObject) throw new IllegalStateException(
+        s"the manifest of generation $gen lists a table without a schema: $t")
+      val name = t.get("name").asText
+      name -> s.read.schema(DataType.fromJson(schema.toString).asInstanceOf[StructType])
+        .parquet(new Path(dir, name).toString)
+    }.toMap
   }
 
   /** Retention: keep the live generation and the generation the previous

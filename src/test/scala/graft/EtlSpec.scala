@@ -2,6 +2,8 @@ package graft
 
 import graft.operators.{Etl, Merge}
 import graft.sources.Sinks
+import org.apache.spark.graftbridge.StorageBridge
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** SURVEY §5 suites for the ETL half: cleansing rules, keep-first dedup,
@@ -70,6 +72,32 @@ class EtlSpec extends SparkSpec {
     assert(merged.map(r => (r.getInt(0), r.getString(1))).toSeq ==
       Seq((1, "Finance"), (2, "HR"), (3, "IT"), (4, "Logistics"), (5, "Sales"), (6, "R&D")),
       "existing ids stable, new dept appended after max id")
+  }
+
+  test("dimUpsert: new ids follow Spark's UTF-8 order, as the window-assigned ids did") {
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes, after it in UTF-16 units
+    val existing = Seq((1, "IT"), (4, "HR")).toDF("dept_id", "dept_name")
+    val incoming = Seq("😀", "Ａ", "IT", null, "B", "Ａ").toDF("dept")
+    val got = Etl.dimUpsert(existing, incoming).collect()
+      .map(r => r.getString(1) -> r.getInt(0)).toMap
+    // the window form the ids were assigned with before they moved to the driver
+    val names = incoming.filter(col("dept").isNotNull).select(col("dept").as("dept_name"))
+      .distinct().join(existing, Seq("dept_name"), "left_anti")
+    val want = existing.unionByName(names.withColumn("dept_id",
+        (lit(4) + row_number().over(Window.orderBy("dept_name"))).cast("int")))
+      .collect().map(r => r.getAs[String]("dept_name") -> r.getAs[Int]("dept_id")).toMap
+    assert(got == want)
+    assert(got == Map("IT" -> 1, "HR" -> 4, "B" -> 5, "Ａ" -> 6, "😀" -> 7), s"got $got")
+  }
+
+  test("dimUpsert runs exactly one job, and its rows read back with none") {
+    val existing = Etl.dimDept(clean1)
+    val batch = Etl.cleanse(Etl.readRaw(spark, Etl.UpdateCsv))
+    val (rows, t) = StorageBridge.inGroup(spark.sparkContext, "etl_spec_dim_jobs") {
+      Etl.dimUpsert(existing, batch).collect()
+    }
+    assert(t.jobs == 1, s"${t.jobs} jobs")
+    assert(rows.length == 6)
   }
 
   test("fact build drops unparseable months (PK NOT NULL analog)") {

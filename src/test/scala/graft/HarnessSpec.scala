@@ -191,4 +191,12 @@ class HarnessSpec extends AnyFunSuite {
     assert(e.getMessage.contains("BENCH names not declared in SparkEntry.queries: kpi_sumary;"))
     assert(e.getMessage.contains("valid: ") && e.getMessage.contains("kpi_summary"))
   }
+
+  test("tools/bench_ab.py's self-test passes on its canned result lines") {
+    // the parent/change verdicts (pair wins, quartile gap, bounds), no benchmark run
+    val p = new ProcessBuilder("python3", "tools/bench_ab.py", "--self-test")
+      .redirectErrorStream(true).start()
+    val out = new String(p.getInputStream.readAllBytes(), "UTF-8")
+    assert(p.waitFor() == 0 && out.contains("self-test ok"), out)
+  }
 }

@@ -46,6 +46,16 @@ class MergePropertySpec extends SparkSpec {
     }
   }
 
+  test("upsert: a NULL key never matches; unmatched duplicate existing keys all survive") {
+    val existing = Seq((None, 1), (Some(1), 2), (Some(2), 3), (Some(2), 4))
+      .toDF("k", "v")
+    val incoming = Seq((None, 9), (Some(1), 5)).toDF("k", "v")
+    val out = Merge.upsert(existing, incoming, Seq("k")).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Int]), r.getInt(1))).sorted.toSeq
+    assert(out == Seq((None, 1), (None, 9), (Some(1), 5), (Some(2), 3), (Some(2), 4)),
+      s"got $out")
+  }
+
   test("insertIfAbsent: existing rows never change; only new keys added (8 cases)") {
     (0 until Cases).foreach { i =>
       val (e0, i0) = (draw(3000 + i), draw(4000 + i))

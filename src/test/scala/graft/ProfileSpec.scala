@@ -29,6 +29,14 @@ class ProfileSpec extends SparkSpec {
     assert(scans.sorted == tables.sorted, s"scan rows $scans, table rows $tables")
   }
 
+  test("a profile leaves out the push-based merge counters by name, and only those") {
+    val names = profile("kpi_by_dept", "profile_spec_names").nodes.flatMap(_._2.keys).toSet
+    assert(names.intersect(Bench.PushMergeMetrics).isEmpty, names)
+    // shuffle-read counters that move under a cluster master, and spill
+    assert(Set("fetchWaitTime", "remoteBytesRead", "remoteBlocksFetched", "spillSize")
+      .subsetOf(names), names)
+  }
+
   test("a profile's totals are its own rep's group: the warm-up is not counted") {
     val sc = spark.sparkContext
     val warm = profile("kpi_by_dept", "profile_spec_rep_1")

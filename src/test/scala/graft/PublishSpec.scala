@@ -1,6 +1,8 @@
 package graft
 
 import graft.sources.Publish
+import org.apache.spark.graftbridge.StorageBridge
+import org.apache.spark.sql.functions.col
 
 /** Crash-window semantics of the multi-table commit (VERDICT r14 #5): a
   * writer dying between table writes must leave readers on the complete
@@ -278,5 +280,46 @@ class PublishSpec extends SparkSpec {
     assert(g("fact").count() == 0 && g("dim").count() == 1)
     assert(g("fact").schema.map(f => f.name -> f.dataType) ==
       empty.schema.map(f => f.name -> f.dataType))
+  }
+
+  /** Jobs `f` runs, counted with `StorageBridge.inGroup`. One marker job
+    * follows `f` in the group, since a group that ran no job has no
+    * totals to read. */
+  private def jobsOf[A](f: => A): (A, Int) = {
+    val sc = sp.sparkContext
+    val (a, t) = StorageBridge.inGroup(sc, s"publish_spec_${System.nanoTime}") {
+      val a = f
+      sc.parallelize(Seq(1), 1).count()
+      a
+    }
+    (a, t.jobs - 1)
+  }
+
+  test("a generation reads back in 0 jobs, each table with its inferred-read schema") {
+    val root = freshRoot()
+    val wide = Seq((1, 2L, "a", java.sql.Date.valueOf("2025-05-01"), 1.5, "12.34"))
+      .toDF("i", "l", "s", "d", "x", "m")
+      .withColumn("m", col("m").cast("decimal(18,2)"))
+    val empty = Seq.empty[(Int, String)].toDF("id", "v")
+    val gen = Publish.publishGeneration(sp, root, Seq("wide" -> wide, "empty" -> empty))
+    // what a schema-less Parquet read infers, one footer job per table
+    val inferred = Seq("wide", "empty")
+      .map(t => t -> sp.read.parquet(s"$root/generations/$gen/$t").schema).toMap
+    val (g, jobs) = jobsOf(Publish.readGeneration(sp, root))
+    assert(jobs == 0, "resolving a generation must run no Spark job")
+    assert(g.map { case (t, df) => t -> df.schema } == inferred)
+    assert(g("wide").collect().toSeq == wide.collect().toSeq && g("empty").count() == 0)
+  }
+
+  test("a manifest without table schemas is refused on read") {
+    val root = freshRoot()
+    val gen = "gen-000001-aaaaaaaa"
+    val dir = new java.io.File(s"$root/generations/$gen")
+    assert(dir.mkdirs())
+    java.nio.file.Files.writeString(new java.io.File(dir, "_MANIFEST.json").toPath,
+      s"""{"generation":"$gen","tables":["t"]}""")
+    Publish.commit(sp, root, gen)
+    val e = intercept[IllegalStateException](Publish.readGeneration(sp, root))
+    assert(e.getMessage.contains("without a schema"), e.getMessage)
   }
 }
